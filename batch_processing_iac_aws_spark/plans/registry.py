@@ -44,34 +44,23 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def fixture_path(*parts: str) -> str:
-    """Absolute path of a committed fixture, derived from the PACKAGE
-    location (…/repo/fixtures/<parts>), never from the process cwd or a
-    hardcoded checkout path — importing the plans package from a checkout
-    that is not /root/repo must still find its own fixtures."""
+def repo_root() -> str:
+    """Root of the checkout this package was imported from, derived from
+    the PACKAGE location, never from the process cwd or a hardcoded
+    checkout path. Inside the worker zip this is the zip file itself, so
+    nothing beside it can be read."""
     import os
 
     pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(os.path.dirname(pkg), "fixtures", *parts)
+    return os.path.dirname(pkg)
 
 
-def _wrap_for_registry(fn: QueryFn) -> QueryFn:
-    """The shared registration wrapper: ship the package to executor
-    Python workers once per session — UDF closures referencing module
-    helpers pickle by reference, and a driver launched outside the repo
-    root has no other way to satisfy the worker-side import
-    (session.ensure_worker_imports)."""
+def fixture_path(*parts: str) -> str:
+    """Absolute path of a committed fixture (<repo_root>/fixtures/<parts>),
+    so a checkout anywhere on disk finds its own fixtures."""
+    import os
 
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..session import ensure_worker_imports
-
-        ensure_worker_imports(spark)
-        return fn(spark, sf_dir)
-
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
-    return wrapped
+    return os.path.join(repo_root(), "fixtures", *parts)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -83,53 +72,27 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        # symmetric to staged_query's guard: a live registration reusing
-        # a STAGED name would otherwise pass silently, and the dict-merge
-        # union in tests/test_oracle.py would let one pair shadow the
-        # other — silently dropping a pair from the differential proof
-        if name in QUERIES or name in STAGED_QUERIES:
+        # a duplicate name would silently replace its twin and drop one
+        # pair from the driver contract and the differential proof
+        if name in QUERIES:
             raise ValueError(f"query name registered twice: {name}")
-        wrapped = _wrap_for_registry(fn)
+
+        # ship the package to executor Python workers once per session:
+        # UDF closures referencing module helpers pickle by reference, and
+        # a driver launched outside the repo root has no other way to
+        # satisfy the worker-side import (session.ensure_worker_imports)
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            from ..session import ensure_worker_imports
+
+            ensure_worker_imports(spark)
+            return fn(spark, sf_dir)
+
+        wrapped.__name__ = fn.__name__
+        wrapped.__doc__ = fn.__doc__
+        wrapped.__wrapped__ = fn
         QUERIES[name] = wrapped
         if oracle is not None:
             ORACLES[name] = oracle
-        return wrapped
-
-    return deco
-
-
-#: Next-round staging area. The driver-window invariant is structural
-#: (plans/__init__.py: the 50-slot window is always the queries with the
-#: OLDEST last-driver-green, never-driver-seen first), so every NEW
-#: registration immediately enters the window and displaces a stale
-#: query — rounds whose window budget is spoken for (round 11: one new
-#: slot + the entire 49-name r6-stale cohort) stage finished pairs here
-#: instead. Staged pairs are held to the SAME proof bar as registered
-#: ones NOW — tests/test_oracle.py parametrizes over the union, so every
-#: suite run differentially checks them against DuckDB at sf0.01 — and
-#: the flip is mechanical: swap ``staged_query`` for ``query`` next
-#: round. They are invisible to __spark_entry__.queries()/oracle_sql()
-#: until then.
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged_query(
-    name: str, oracle: str | None = None
-) -> Callable[[QueryFn], QueryFn]:
-    """Register a finished (query, oracle) pair into the STAGING area —
-    suite-proven now, driver-registered next round (see STAGED_QUERIES
-    note). Name collisions with live registrations are a bug."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        # a duplicate staged name would silently shadow its twin and
-        # drop one pair from the every-suite-run differential proof
-        if name in QUERIES or name in STAGED_QUERIES:
-            raise ValueError(f"staged name already registered: {name}")
-        wrapped = _wrap_for_registry(fn)
-        STAGED_QUERIES[name] = wrapped
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
         return wrapped
 
     return deco

@@ -1,70 +1,53 @@
-"""Round-11 staged registrations, FLIPPED LIVE in round 12.
+"""Data-selection, store, record-linkage and true-bits media queries.
 
-These four (query, oracle) pairs were finished in round 11 but the
-50-slot driver window's budget was spoken for (one new slot plus the
-entire 49-name r6-stale rotation-repair cohort), so they staged here —
-held to the SAME differential bar as live registrations every suite run
-via tests/test_oracle.py's live+staged union, and hash-matched against
-DuckDB at sf0.001, sf0.01 AND full sf0.1 before staging. The round-12
-flip (``staged_query`` -> ``query``) is therefore proof-neutral: the
-driver row is the first INDEPENDENT confirmation, not the first proof.
-
-Live as of round 12:
+Registered here, each with a DuckDB oracle:
 
 * ``dsir_select`` — the DSIR data-selection head over the documents
   corpus (operators/selection.py, Xie et al. NeurIPS 2023), portable
   md5 bucket family so DuckDB replays featurization, smoothing, and the
   weighted sum bit-exactly (the oracle template here is the one
   tests/test_selection.py proved against the pure-Python mirror).
-* ``dsir_gumbel`` — DSIR's PUBLISHED selection rule (Gumbel-top-k
-  sampling without replacement, deterministic salted-md5 noise), the
-  sampling head to ``dsir_select``'s zero-temperature limit; the oracle
-  parses the digest's first 12 hex chars with an exact strpos fold.
 * ``table_snapshot_asof`` — the generationed store's snapshot-read
   contract (operators/index_store.py:read_index(as_of_batch=...)):
   reproduce the corpus table exactly as it stood after ingest batch K,
   through a compaction that merged K's partition away, via the
   ``ingest_batch`` lineage column — plus the loud refusal when no
   lineage exists below the watermark.
+* ``dsir_gumbel`` — DSIR's PUBLISHED selection rule (Gumbel-top-k
+  sampling without replacement, deterministic salted-md5 noise), the
+  sampling head to ``dsir_select``'s zero-temperature limit; the oracle
+  parses the digest's first 12 hex chars with an exact strpos fold.
 * ``join_fuzzy_match`` — record linkage (entity resolution) across two
   tables on a dirty text key: blocking equi-join + integer-exact
   levenshtein verify + deterministic best-match window
   (operators/joins.py:fuzzy_join).
-
-Live as of round 13 (the round-12 staged pair, flipped under the same
-proof-neutral rule — both hash-proven vs DuckDB at sf0.001/0.01/full
-sf0.1 while staged, per the ARCHITECTURE round-12 coda):
-
 * ``multimodal_wav_envelope`` — the true-bits audio seam: engine
   encode_wav stereo PCM -> RIFF walk -> downmix -> block-RMS envelope.
 * ``multimodal_audio_near_dup`` — gain-invariant audio near-dup on
   true PCM bits through the shared banded perceptual-hash join.
-
-New in round 13 (registered live, never staged — the end-to-end
-curation composition the r12 verdict's growth item 8 ordered):
-
 * ``dsir_mixture_select`` — ``dataset_mixture`` -> ``dsir_select``:
   the weighted deterministic corpus mix IS the raw pool, a held-out
   domain (source ``src0``) is the target, and the DSIR head keeps the
-  mixture docs most target-like — the query a real pretraining
-  curation pipeline runs, composed from two independently-green
-  operators.
-
-Live as of round 14 (the round-13 staged pair, flipped under the same
-proof-neutral rule — both hash-proven vs DuckDB at sf0.001/0.01/full
-sf0.1 while staged, per the ARCHITECTURE round-13 codas):
-
+  mixture docs most target-like.
 * ``multimodal_avi_frames`` — the true-bits video container seam:
   engine encode_jpeg_gray -> encode_avi_mjpeg -> RIFF/movi walk ->
   JPEG luma decode -> block-mean frame features.
 * ``multimodal_video_near_dup`` — brightness-invariant video near-dup
   on true container bits through the shared banded perceptual-hash
-  join; completes the near-dup triad (image r8, audio r13, video now).
-
-Round-15 staging area: pairs finished in round 14 that the round-14
-window could not absorb (every live registration displaces a stale
-rotation slot) register below with ``staged_query`` under the same
-every-suite-run differential gate.
+  join.
+* ``multimodal_g711_telephony`` — A-law/mu-law WAV decode on true
+  format-6/7 bits.
+* ``multimodal_audio_shift_near_dup`` — time-shift-robust audio
+  near-dup: onset-aligned block energies survive leading/trailing
+  silence.
+* ``multimodal_avi_rgb_frames`` — color MJPEG-in-AVI frames through
+  the chroma decode path.
+* ``multimodal_g711_compand_roundtrip`` — the G.711 compander (encode
+  half) round-tripped through a real format-6/7 WAV.
+* ``multimodal_adpcm_decode`` — IMA/DVI ADPCM (format 17) decode of
+  coded blocks through the stateful recurrence.
+* ``multimodal_adpcm_roundtrip`` — the IMA ADPCM compressor
+  round-tripped through encode and decode.
 """
 
 from __future__ import annotations
@@ -73,7 +56,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import fanout_scan, load_table
-from .registry import query, scratch_dir, staged_query  # noqa: F401
+from .registry import query, scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -328,7 +311,7 @@ def dsir_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Gumbel-top-k identity, with deterministic engine-portable noise
     (the corpus ops' shared salted-md5 digest -> uniform -> standard
     Gumbel; salt ``"r12"`` is the re-draw lever). Same raw/target split
-    and portable md5 bucket family as the staged ``dsir_select`` — this
+    and portable md5 bucket family as ``dsir_select`` — this
     pair proves the sampling head end-to-end in DuckDB (digest parse,
     uniform scaling, double-log Gumbel, 6dp-rounded perturbed key, the
     deterministic tiebreak), where the top-k pair proves the
@@ -1149,7 +1132,7 @@ def multimodal_g711_telephony(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
+@query(
     "multimodal_audio_shift_near_dup",
     oracle="""
 WITH media AS (
@@ -1345,7 +1328,7 @@ def _rgb_oracle_sql() -> str:
     )
 
 
-@staged_query("multimodal_avi_rgb_frames", oracle=_rgb_oracle_sql())
+@query("multimodal_avi_rgb_frames", oracle=_rgb_oracle_sql())
 def multimodal_avi_rgb_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLOR video frames through the REAL container + color codec
     (r13 verdict growth item 7): every document becomes a true
@@ -1447,7 +1430,7 @@ def multimodal_avi_rgb_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
+@query(
     "multimodal_g711_compand_roundtrip",
     oracle="""
 WITH g AS (
@@ -1574,7 +1557,7 @@ def multimodal_g711_compand_roundtrip(
     )
 
 
-@staged_query(
+@query(
     "multimodal_adpcm_decode",
     oracle="""
 WITH RECURSIVE st(idx, step) AS (
@@ -1723,7 +1706,7 @@ def multimodal_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query(
+@query(
     "multimodal_adpcm_roundtrip",
     oracle="""
 WITH RECURSIVE st(idx, step) AS (

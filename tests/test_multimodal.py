@@ -3261,8 +3261,8 @@ def test_audio_onset_alignment_is_shift_invariant():
     """The shift-robust audio row's kernel, isolated: leading silence
     (any length) plus trailing padding leaves the onset-aligned block
     energies EXACTLY equal to the original's — invariance by
-    construction on the 2^-16 sample lattice, the property the staged
-    multimodal_audio_shift_near_dup pair rides to hamming 0."""
+    construction on the 2^-16 sample lattice, the property the
+    multimodal_audio_shift_near_dup query rides to hamming 0."""
     from batch_processing_iac_aws_spark.operators.multimodal import (
         _wav_decode_samples,
         encode_wav,

@@ -10,17 +10,8 @@ import pandas as pd
 import pytest
 
 from batch_processing_iac_aws_spark.plans import ORACLES, QUERIES
-from batch_processing_iac_aws_spark.plans.registry import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
 
 from .conftest import SF_CORRECT
-
-# staged next-round registrations are held to the SAME differential bar
-# as live ones, every suite run, so the round-12 flip is proof-neutral
-_ALL_QUERIES = {**QUERIES, **STAGED_QUERIES}
-_ALL_ORACLES = {**ORACLES, **STAGED_ORACLES}
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -58,10 +49,10 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(records, columns=df.columns)
 
 
-@pytest.mark.parametrize("name", sorted(_ALL_ORACLES))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(name, spark, duck):
-    sdf = _ALL_QUERIES[name](spark, SF_CORRECT).toPandas()
-    odf = duck.execute(_ALL_ORACLES[name]).df()
+    sdf = QUERIES[name](spark, SF_CORRECT).toPandas()
+    odf = duck.execute(ORACLES[name]).df()
 
     assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} != {len(odf)}"
     assert sorted(map(str.lower, sdf.columns)) == sorted(
@@ -101,7 +92,7 @@ def test_oracle_match(name, spark, duck):
     assert not mismatches, f"{name}: value mismatches {mismatches[:5]}"
 
 
-@pytest.mark.parametrize("name", sorted(_ALL_QUERIES))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_output_columns_are_hashable(name, spark):
     """The driver canonicalizes results via pandas sort_values + hashing;
     ArrayType/MapType cells arrive as numpy arrays / dicts and crash it
@@ -112,7 +103,7 @@ def test_output_columns_are_hashable(name, spark):
     serialize lists with array_join or unpack to columns."""
     from pyspark.sql.types import ArrayType, MapType
 
-    df = _ALL_QUERIES[name](spark, SF_CORRECT)
+    df = QUERIES[name](spark, SF_CORRECT)
     offenders = [
         f.name
         for f in df.schema.fields

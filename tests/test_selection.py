@@ -117,10 +117,9 @@ def test_dsir_weights_match_pure_python_reimplementation(spark):
             assert got[s] > got[o], (s, o)
 
 
-#: The registered-candidate oracle now lives with the staged round-12
-#: registration (plans/staged.py:DSIR_ORACLE_SQL) — imported here so the
-#: pure-Python differential below keeps proving the SAME template the
-#: future driver row will run.
+#: The oracle lives with the registered dsir_select query
+#: (plans/staged.py:DSIR_ORACLE_SQL) — imported here so the pure-Python
+#: differential below keeps proving the SAME template the driver row runs.
 from batch_processing_iac_aws_spark.plans.staged import DSIR_ORACLE_SQL
 
 
