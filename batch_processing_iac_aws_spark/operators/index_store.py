@@ -275,10 +275,6 @@ class FakeObjectStoreBackend(StoreBackend):
 _STORE_BACKEND: StoreBackend = LocalStoreBackend()
 
 
-def store_backend() -> StoreBackend:
-    return _STORE_BACKEND
-
-
 def set_store_backend(backend: StoreBackend) -> StoreBackend:
     """Install a control-plane client; returns the previous one so
     tests/ports can restore it."""

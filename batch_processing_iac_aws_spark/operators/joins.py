@@ -121,34 +121,6 @@ def asof_join(
     )
 
 
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    extra: Column | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Join rows whose HALF-OPEN [start, end) intervals overlap:
-    ``l.start < r.end AND r.start < l.end`` — intervals that merely touch
-    at an endpoint (or zero-length points on a boundary) do NOT match;
-    use <= variants for closed-interval semantics.
-
-    At 100 TB this is the operator to pair with a coarse equi-join key
-    (e.g. day bucket) so the non-equi predicate only runs within buckets;
-    pass that bucket equality via ``extra``.
-    """
-    cond = (F.col(left_start) < F.col(right_end)) & (
-        F.col(right_start) < F.col(left_end)
-    )
-    if extra is not None:
-        cond = cond & extra
-    return left.join(right, cond, how)
-
-
 def fuzzy_join(
     left: DataFrame,
     right: DataFrame,

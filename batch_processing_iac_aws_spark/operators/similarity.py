@@ -858,7 +858,8 @@ def _retrain_ivf_index(
     partitions: a crash after a partial normal-path append (or between
     the new generation's writes and its commit) replays under the same
     batch_id, and reading our own half-written rows back would store
-    every batch vector twice (the ingest_dedup_batch crash-window rule).
+    every batch vector twice (the crash-window rule of the rolling
+    ingest, streaming/pipeline.py:_history).
     Each stored row KEEPS its original batch_seq and the new batch gets
     ``batch_id``; combined with the single-pointer commit this makes
     EVERY crash point a fixpoint: pre-commit, CURRENT still names the old

@@ -54,10 +54,6 @@ def bpe_ish_tokens(text_col: Column | str) -> Column:
     )
 
 
-def token_count(text_col: Column | str) -> Column:
-    return F.size(tokens(text_col))
-
-
 def bpe_ish_tokenize_py(text: str) -> list[str]:
     """Pure-Python twin of :func:`bpe_ish_tokens` (same regex, same
     no-empties semantics) — the deterministic in-sandbox fallback for the
@@ -134,7 +130,7 @@ def count_tokens(
 
     Arrow-batched pandas UDF — the tokenizer is Python (that is the point
     of the seam), so this is the 10-100x-over-row-UDF path, map-only, no
-    shuffle. The in-engine Column twin (token_count / bpe_ish_tokens)
+    shuffle. The in-engine Column twin (F.size over bpe_ish_tokens)
     stays the hot path when the regex approximation is acceptable."""
     from pyspark.sql.functions import pandas_udf
 

@@ -1282,8 +1282,8 @@ def streaming_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced so file order IS batch order); micro-batch 0 trains and
     persists the IVF index, batches 1-2 ingest map-only against the
     stored centroids under checkpointed sequencing with replay-stable
-    batch-keyed overwrites (streaming/pipeline.py:run_streaming_ann_
-    ingest). Search then runs against the persisted index over the same
+    batch-keyed overwrites (streaming/pipeline.py:ingest_ann_batch).
+    Search then runs against the persisted index over the same
     20 queries with the standard in-engine recall audit: floor 0.60 at
     n_probe=6/16 (measured 0.68-0.79 across sf0.001/0.01/0.1 with the
     round-8 refined init — a first-batch-only quantizer, refined or not,
@@ -1298,10 +1298,10 @@ def streaming_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation still exercises the full build/append path."""
     import glob as _glob
     import os
+    from functools import partial
 
     from ..operators.similarity import ivf_index_topk
-    from ..streaming.pipeline import run_streaming_ann_ingest
-
+    from ..streaming.pipeline import ingest_ann_batch, run_rolling_ingest
     from .registry import scratch_source_cache
 
     base = scratch_dir("annstream", sf_dir)
@@ -1324,9 +1324,9 @@ def streaming_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stamped.add(f)
         with open(f"{cache}/_BUILT", "w") as fh:
             fh.write("ok")
-    run_streaming_ann_ingest(
-        spark, src, f"{base}/index", f"{base}/ckpt", n_centroids=16
-    )
+    run_rolling_ingest(spark, src, f"{base}/ckpt", partial(
+        ingest_ann_batch, index_dir=f"{base}/index", n_centroids=16
+    ))
     q = e.filter(F.col("vec_id") < 20)
     ann = ivf_index_topk(spark, q, f"{base}/index", k=5, n_probe=6)
     exact = brute_force_topk(e, q, k=5)

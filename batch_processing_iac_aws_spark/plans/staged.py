@@ -215,9 +215,10 @@ def table_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
     import shutil
+    from functools import partial
 
     from ..operators.index_store import compact_table, read_table
-    from ..streaming.pipeline import run_streaming_ingest_dedup
+    from ..streaming.pipeline import ingest_dedup_batch, run_rolling_ingest
     from .stream_windows import _dup_decorated_ingest_source
 
     base = scratch_dir("tsnap", sf_dir)
@@ -230,7 +231,9 @@ def table_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, index, ckpt = f"{base}/table", f"{base}/index", f"{base}/ckpt"
     for f in files:
         shutil.copy2(f, src)
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, partial(
+        ingest_dedup_batch, table_dir=table, index_dir=index
+    ))
 
     # gate audits are AGGREGATES, never table collects (the
     # layout_audit discipline): the invariance compare is the shared

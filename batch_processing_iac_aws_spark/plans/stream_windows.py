@@ -10,12 +10,17 @@ exactly-once replacement for the reference's cron + Glue-bookmark pattern
 from __future__ import annotations
 
 import uuid
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
-from ..streaming.pipeline import drain_to_memory
+from ..streaming.pipeline import (
+    drain_to_memory,
+    ingest_dedup_batch,
+    run_rolling_ingest,
+)
 from .registry import ORACLES, money_sum, query, scratch_dir
 
 _HOUR_US = 3_600_000_000
@@ -483,8 +488,8 @@ WHERE NOT EXISTS (
 )
 def streaming_quality_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEVENTH streaming composition — the quality gate FUSED into
-    the rolling ingest (streaming/pipeline.py:run_streaming_quality_
-    ingest), which is the pass a real pretraining pipeline runs: each
+    the rolling ingest (streaming/pipeline.py:ingest_quality_batch),
+    which is the pass a real pretraining pipeline runs: each
     micro-batch scores quality_features -> the weights-as-data logit at
     the scan, drops ``logit < 0`` docs map-only BEFORE anything shuffles,
     exact-dedups the survivors within-batch and against the persisted
@@ -500,16 +505,16 @@ def streaming_quality_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     source with streaming_incremental_dedup; table/index/checkpoint
     rebuild per call under the wiped scratch_dir."""
     from ..operators.quality import load_quality_weights
-    from ..streaming.pipeline import run_streaming_quality_ingest
+    from ..streaming.pipeline import ingest_quality_batch
     from .registry import fixture_path
 
     base = scratch_dir("qingest", sf_dir)
     src = _dup_decorated_ingest_source(spark, sf_dir)
     w = load_quality_weights(fixture_path("quality_weights.tsv"))
-    run_streaming_quality_ingest(
-        spark, src, f"{base}/table", f"{base}/index", f"{base}/ckpt",
-        weights=w,
-    )
+    run_rolling_ingest(spark, src, f"{base}/ckpt", partial(
+        ingest_quality_batch,
+        table_dir=f"{base}/table", index_dir=f"{base}/index", weights=w,
+    ))
     from ..operators.index_store import read_table
 
     return read_table(spark, f"{base}/table").select(
@@ -583,7 +588,7 @@ FROM (SELECT doc_id FROM s0 UNION ALL
 def streaming_incremental_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SIXTH streaming composition — rolling-corpus ingestion with
     LEXICAL-COSINE dedup through the REAL streaming engine
-    (streaming/pipeline.py:run_streaming_sparse_ingest): documents arrive
+    (streaming/pipeline.py:ingest_sparse_batch): documents arrive
     as three ordered batch files (doc_id % 3, mtimes forced so file order
     IS batch order); each micro-batch keeps the lowest id per exact
     content hash within itself, drops docs whose hashed-BoW cosine
@@ -606,7 +611,7 @@ def streaming_incremental_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
 
-    from ..streaming.pipeline import run_streaming_sparse_ingest
+    from ..streaming.pipeline import ingest_sparse_batch
     from .registry import scratch_source_cache
 
     base = scratch_dir("sparsestream", sf_dir)
@@ -648,10 +653,10 @@ def streaming_incremental_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stamped.add(f)
         with open(f"{cache}/_BUILT", "w") as fh:
             fh.write("ok")
-    run_streaming_sparse_ingest(
-        spark, src, f"{base}/table", f"{base}/index", f"{base}/ckpt",
-        dim=4096, threshold=0.95,
-    )
+    run_rolling_ingest(spark, src, f"{base}/ckpt", partial(
+        ingest_sparse_batch, table_dir=f"{base}/table",
+        index_dir=f"{base}/index", dim=4096, threshold=0.95,
+    ))
     from ..operators.index_store import read_table
 
     return read_table(spark, f"{base}/table").select(
@@ -684,7 +689,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch dedups within itself (keep lowest id per sha256) and
     against the persisted fingerprint index of all earlier batches, and
     appends survivors + digests via deterministic batch-keyed partition
-    overwrite (streaming/pipeline.py:run_streaming_ingest_dedup). The
+    overwrite (streaming/pipeline.py:ingest_dedup_batch). The
     oracle states the fixpoint directly: a document survives iff no
     earlier-batch (or same-batch lower-id) document shares its hash —
     so the hash match proves checkpointed batch sequencing, the index
@@ -696,16 +701,15 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm iterations measure the streaming ingest, not corpus prep; the
     table/index/checkpoint stay under the per-call wiped scratch_dir so
     every invocation exercises the full three-batch pipeline."""
-    from ..streaming.pipeline import run_streaming_ingest_dedup
-
     base = scratch_dir("ingest", sf_dir)
     # deterministic cross-batch duplicate decoration + three ordered batch
     # files, cached per process — shared with streaming_quality_ingest
     # (_dup_decorated_ingest_source)
     src = _dup_decorated_ingest_source(spark, sf_dir)
-    run_streaming_ingest_dedup(
-        spark, src, f"{base}/table", f"{base}/index", f"{base}/ckpt"
-    )
+    run_rolling_ingest(spark, src, f"{base}/ckpt", partial(
+        ingest_dedup_batch,
+        table_dir=f"{base}/table", index_dir=f"{base}/index",
+    ))
     from ..operators.index_store import read_table
 
     return read_table(spark, f"{base}/table").select(
@@ -811,7 +815,7 @@ FROM (SELECT doc_id FROM s0 UNION ALL
 def streaming_fuzzy_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NINTH streaming composition — NEAR-duplicate rolling ingest
     through the REAL streaming engine
-    (streaming/pipeline.py:run_streaming_fuzzy_ingest), the fuzzy twin
+    (streaming/pipeline.py:ingest_fuzzy_batch), the fuzzy twin
     of streaming_incremental_dedup and the composition a re-crawling web
     pipeline actually needs: exact hashing misses the same page
     re-served with one extra word, so each micro-batch keeps the lowest
@@ -831,13 +835,14 @@ def streaming_fuzzy_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions. Source capped at doc_id < 1000 and cached per process;
     table/index/checkpoint rebuild per call under the wiped
     scratch_dir."""
-    from ..streaming.pipeline import run_streaming_fuzzy_ingest
+    from ..streaming.pipeline import ingest_fuzzy_batch
 
     base = scratch_dir("fingest", sf_dir)
     src = _fuzzy_decorated_ingest_source(spark, sf_dir)
-    run_streaming_fuzzy_ingest(
-        spark, src, f"{base}/table", f"{base}/index", f"{base}/ckpt"
-    )
+    run_rolling_ingest(spark, src, f"{base}/ckpt", partial(
+        ingest_fuzzy_batch,
+        table_dir=f"{base}/table", index_dir=f"{base}/index",
+    ))
     from ..operators.index_store import read_table
 
     return read_table(spark, f"{base}/table").select(
@@ -881,17 +886,13 @@ def streaming_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint as streaming_incremental_dedup plus each survivor's
     batch_seq — compaction must change NOTHING about survivors, and
     post-compaction ingests must still land their own table partitions.
-    streaming/pipeline.py:run_streaming_ingest_dedup +
+    streaming/pipeline.py:run_rolling_ingest + ingest_dedup_batch;
     operators/index_store.py:compact_index."""
     import glob as _glob
     import os
     import shutil
 
     from ..operators.index_store import compact_index
-    from ..streaming.pipeline import (
-        ingest_dedup_batch,
-        run_streaming_ingest_dedup,
-    )
 
     base = scratch_dir("cingest", sf_dir)
     src_all = _dup_decorated_ingest_source(spark, sf_dir)
@@ -901,24 +902,22 @@ def streaming_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{base}/src"
     os.makedirs(src, exist_ok=True)
     table, index, ckpt = f"{base}/table", f"{base}/index", f"{base}/ckpt"
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=index)
     # stage 1: the first two batch files exist; the stream drains them
     # (copy2 preserves mtimes, so file order stays batch order)
     for f in files[:2]:
         shutil.copy2(f, src)
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     audit = compact_index(spark, index, upto_batch=1)
     refused = False
     try:
-        ingest_dedup_batch(
-            spark.read.parquet(files[1]), 1,
-            table_dir=table, index_dir=index,
-        )
+        ingest(spark.read.parquet(files[1]), 1)
     except ValueError:
         refused = True
     # stage 2: batch 2 arrives later; the SAME checkpoint continues and
     # processes only the new file, against the compacted generation
     shutil.copy2(files[2], src)
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     audit_ok = (
         audit["rows_before"] == audit["rows_after"]
         and audit["files_after"] < audit["files_before"]
@@ -967,7 +966,8 @@ def table_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table hits small-files before the digest-sized index does, and a
     replayed batch after table compaction is the same silent
     row-doubling the index guard stops). Batches 0-1 stream in through
-    run_streaming_ingest_dedup — since round 10 the WHOLE ingest family
+    run_rolling_ingest + ingest_dedup_batch — since round 10 the WHOLE
+    ingest family
     writes BOTH table and index behind committed generation pointers —
     then an offline compact_table(upto_batch=1) merges
     the table's two batch partitions under the atomic generation flip
@@ -988,7 +988,7 @@ def table_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-arrival fixpoint of streaming_incremental_dedup PLUS each
     survivor's original batch — proving compaction changed nothing
     logical while the layout collapsed.
-    streaming/pipeline.py:run_streaming_ingest_dedup / ingest_dedup_batch
+    streaming/pipeline.py:run_rolling_ingest / ingest_dedup_batch
     (store-backed on BOTH sides since round 10);
     operators/index_store.py:compact_table (the payload-agnostic store).
     """
@@ -1001,10 +1001,6 @@ def table_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         layout_audit,
         read_table,
     )
-    from ..streaming.pipeline import (
-        ingest_dedup_batch,
-        run_streaming_ingest_dedup,
-    )
 
     base = scratch_dir("tingest", sf_dir)
     src_all = _dup_decorated_ingest_source(spark, sf_dir)
@@ -1014,22 +1010,20 @@ def table_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{base}/src"
     os.makedirs(src, exist_ok=True)
     table, index, ckpt = f"{base}/table", f"{base}/index", f"{base}/ckpt"
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=index)
     for f in files[:2]:
         shutil.copy2(f, src)
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     audit = compact_table(spark, table, upto_batch=1)
     pre = layout_audit(read_table(spark, table))
     refused = False
     try:
-        ingest_dedup_batch(
-            spark.read.parquet(files[1]), 1,
-            table_dir=table, index_dir=index,
-        )
+        ingest(spark.read.parquet(files[1]), 1)
     except ValueError:
         refused = True
     post = layout_audit(read_table(spark, table))
     shutil.copy2(files[2], src)
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     audit_ok = (
         audit["rows_before"] == audit["rows_after"]
         and audit["files_after"] < audit["files_before"]
@@ -1105,10 +1099,6 @@ def table_objectstore_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table,
         set_store_backend,
     )
-    from ..streaming.pipeline import (
-        ingest_dedup_batch,
-        run_streaming_ingest_dedup,
-    )
 
     base = scratch_dir("osingest", sf_dir)
     src_all = _dup_decorated_ingest_source(spark, sf_dir)
@@ -1118,6 +1108,7 @@ def table_objectstore_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{base}/src"
     os.makedirs(src, exist_ok=True)
     table, index, ckpt = f"{base}/table", f"{base}/index", f"{base}/ckpt"
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=index)
     be = FakeObjectStoreBackend()
     contended: "set[str]" = set()
 
@@ -1135,20 +1126,17 @@ def table_objectstore_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for f in files[:2]:
             shutil.copy2(f, src)
-        run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+        run_rolling_ingest(spark, src, ckpt, ingest)
         audit = compact_table(spark, table, upto_batch=1)
         pre = layout_audit(read_table(spark, table))
         refused = False
         try:
-            ingest_dedup_batch(
-                spark.read.parquet(files[1]), 1,
-                table_dir=table, index_dir=index,
-            )
+            ingest(spark.read.parquet(files[1]), 1)
         except ValueError:
             refused = True
         post = layout_audit(read_table(spark, table))
         shutil.copy2(files[2], src)
-        run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+        run_rolling_ingest(spark, src, ckpt, ingest)
         audit_ok = (
             audit["rows_before"] == audit["rows_after"]
             and audit["files_after"] < audit["files_before"]
@@ -1204,7 +1192,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto-compaction POLICY fused in-band, driver-proven (round 10 proved
     the policy in pytest only; this row graduates it, the same
     pytest-to-driver path the manual compaction took in rounds 8-10).
-    One run_streaming_ingest_dedup(auto_compact_batches=1) pass over the
+    One run_rolling_ingest(auto_compact_batches=1) dedup pass over the
     three-batch duplicate-decorated source: before micro-batch 2 the
     metadata-only trigger (operators/index_store.py:compact_if_needed —
     a directory listing, ZERO Spark jobs on the no-op path) finds both
@@ -1228,7 +1216,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA column while batch_seq remaps under the merge, so the oracle
     asserts the first-arrival fixpoint PLUS each survivor's original
     batch — the policy changed nothing logical.
-    streaming/pipeline.py:run_streaming_ingest_dedup /
+    streaming/pipeline.py:run_rolling_ingest /
     _maybe_auto_compact; operators/index_store.py:compact_if_needed /
     layout_counts_meta."""
     import glob as _glob
@@ -1242,10 +1230,6 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_current,
         store_watermark,
     )
-    from ..streaming.pipeline import (
-        ingest_dedup_batch,
-        run_streaming_ingest_dedup,
-    )
 
     base = scratch_dir("acingest", sf_dir)
     src_all = _dup_decorated_ingest_source(spark, sf_dir)
@@ -1255,10 +1239,12 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{base}/src"
     os.makedirs(src, exist_ok=True)
     table, index, ckpt = f"{base}/table", f"{base}/index", f"{base}/ckpt"
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=index)
     for f in files:
         shutil.copy2(f, src)
-    run_streaming_ingest_dedup(
-        spark, src, table, index, ckpt, auto_compact_batches=1
+    run_rolling_ingest(
+        spark, src, ckpt, ingest,
+        stores=(table, index), auto_compact_batches=1,
     )
     # gate 1: the policy fired mid-stream on BOTH stores — each current
     # generation is the compaction generation gen-c1 (watermark 1) and
@@ -1274,10 +1260,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = layout_audit(read_table(spark, table))
     refused = False
     try:
-        ingest_dedup_batch(
-            spark.read.parquet(files[1]), 1,
-            table_dir=table, index_dir=index,
-        )
+        ingest(spark.read.parquet(files[1]), 1)
     except ValueError:
         refused = True
     refused = refused and layout_audit(read_table(spark, table)) == pre
@@ -1295,10 +1278,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         is None
     )
-    ingest_dedup_batch(
-        spark.read.parquet(files[2]), 2,
-        table_dir=table, index_dir=index,
-    )
+    ingest(spark.read.parquet(files[2]), 2)
     survivors_post = survivor_digest(read_table(spark, table))
     fixpoint = (
         replay_noop

@@ -11,10 +11,21 @@ the transformation is the same DataFrame code as batch.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import LongType
 
+from ..operators.index_store import (
+    append_index,
+    append_table,
+    assert_appendable,
+    assert_table_appendable,
+    compact_if_needed,
+    read_index,
+    read_table,
+)
 from ..session import apply_runtime_conf
 
 
@@ -204,207 +215,6 @@ def run_available_now_sessions(
     return spark.table(name)
 
 
-def _maybe_auto_compact(
-    spark, stores, batch_id: int, max_batches: "int | None"
-) -> None:
-    """Shared in-band maintenance hook for every rolling-ingest runner:
-    before processing micro-batch N, compact each store that has
-    accreted past ``max_batches`` batch partitions, up to the
-    checkpoint-committed horizon N-1 (foreachBatch(N) runs only after
-    batch N-1's commit, so merging it is safe; a crash-replay of N
-    re-runs the same compaction as an idempotent fixpoint). No-op when
-    ``max_batches`` is None — maintenance stays opt-in per pipeline."""
-    if max_batches is None or batch_id == 0:
-        return
-    from ..operators.index_store import compact_if_needed
-
-    for store in stores:
-        compact_if_needed(
-            spark,
-            store,
-            committed_upto=batch_id - 1,
-            max_batches=max_batches,
-        )
-
-
-def run_streaming_ingest_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    table_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    auto_compact_batches: "int | None" = None,
-) -> None:
-    """Rolling-corpus ingestion as a REAL streaming job: document batches
-    arrive as files, each micro-batch dedups within itself (keep lowest
-    id per content hash) and against the PERSISTED fingerprint index of
-    everything already ingested, then appends its survivors to the
-    corpus table and their digests to the index — the end-to-end
-    composition of operators.dedup.incremental_dedup with streaming
-    checkpoints standing in for the reference's Glue job bookmarks
-    (reference: batch_processing_IaC.py's bookmark-incremental scans).
-
-    ``auto_compact_batches`` makes the ingest SELF-MAINTAINING: before
-    processing micro-batch N, both stores compact via
-    :func:`~..operators.index_store.compact_if_needed` whenever they
-    have accreted more than that many batch partitions — the OPTIMIZE
-    loop a 24/7 pipeline schedules out-of-band, fused in-band where it
-    is trivially safe. The committed horizon is ``N - 1``: Structured
-    Streaming runs foreachBatch(N) only after batch N-1's checkpoint
-    commit, so every batch at or below N-1 is durably ingested and can
-    merge, while batch N itself (and any crash-replay of it) stays
-    above the watermark. A replay of batch N after a crash re-runs the
-    same compaction first — :func:`compact_index`'s generation naming
-    makes that an idempotent fixpoint.
-
-    Exactly-once by construction, twice over: the checkpoint guarantees a
-    drained source never re-delivers a batch, and both writes are
-    dynamic-partition OVERWRITES keyed by foreachBatch's batch_id —
-    unique per micro-batch and REPLAY-STABLE (an interrupted batch
-    retries under the same id from the checkpoint), so a replayed batch
-    rewrites exactly its own partition instead of appending duplicates.
-    (A content-derived key like min(id) is NOT safe here: id spaces that
-    recur across crawls would collide two different batches onto one
-    partition and the second overwrite would destroy the first batch's
-    rows and index entries.)
-
-    Scale shape per batch: one batch-sized hash-agg for the within-batch
-    keep-first, one anti-join shipping 32-byte digests against an index
-    ~3 orders smaller than the corpus (bucket the index by hash to make
-    it shuffle-free on the history side), map-only writes."""
-    schema = (
-        spark.read.format("parquet").load(source_dir).schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_auto_compact(
-            spark, (table_dir, index_dir), batch_id, auto_compact_batches
-        )
-        ingest_dedup_batch(
-            batch_df,
-            batch_id,
-            table_dir=table_dir,
-            index_dir=index_dir,
-            id_col=id_col,
-            text_col=text_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_dedup_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    *,
-    table_dir: str,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """One micro-batch of the rolling-ingest dedup — module-level so the
-    crash/replay contract is directly testable outside the streaming
-    engine (tests/test_streaming.py replays it mid-crash-window).
-
-    Idempotent for EVERY crash point under a replay-stable ``batch_id``:
-    both writes are dynamic-partition overwrites keyed by batch_seq, and
-    the index read EXCLUDES the batch's own partition — a crash after the
-    index write but before checkpoint commit would otherwise leave the
-    retry anti-joining against its own partial output, shrinking the
-    batch to the complement subset and permanently losing rows from both
-    the table and the index.
-
-    BOTH sides live in the generationed store (operators/index_store.py)
-    since round 10 — the round-9 lifecycle asymmetry (generationed
-    indexes, bare accreting tables) is closed: reads resolve through the
-    committed CURRENT pointer, appends stamp their own batch_seq
-    partition, and offline :func:`~..operators.index_store.compact_index`
-    / ``compact_table`` runs can merge old batch partitions on EITHER
-    side without breaking this ingest — each store's watermark makes a
-    replay of a compacted-away batch refuse loudly, checked here for
-    both BEFORE any write (table first; the table write happens first).
-    Per-row arrival lineage is stamped as the DATA column
-    ``ingest_batch``: table compaction remaps the batch_seq PARTITION
-    value of merged batches (layout metadata), but never touches data
-    columns — the lakehouse-OPTIMIZE contract."""
-    if batch_df.isEmpty():
-        return
-    from pyspark.sql import Window
-
-    from ..operators.index_store import (
-        append_index,
-        append_table,
-        assert_appendable,
-        assert_table_appendable,
-        read_index,
-    )
-
-    # refuse a replay of a compacted-away batch BEFORE any write: the
-    # index read below excludes "this batch's own" partition, but after
-    # compaction that partition holds the merged HISTORY — the replay
-    # would recompute survivors with no history and overwrite a corrupt
-    # table partition before append_index's own guard fired
-    assert_table_appendable(table_dir, batch_id)
-    assert_appendable(index_dir, batch_id)
-    spark = batch_df.sparkSession
-    hashed = batch_df.withColumn(
-        "content_hash", F.sha2(F.col(text_col), 256)
-    )
-    # within-batch keep-first (lowest id per hash)
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    firsts = (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    try:
-        index = (
-            read_index(spark, index_dir)
-            .where(F.col("batch_seq") != F.lit(batch_id))
-            .select("content_hash")
-        )
-    except FileNotFoundError:
-        # ONLY a never-committed store (no CURRENT pointer) means "first
-        # batch". Any other read failure (storage error, corrupted
-        # footer) must raise: treating it as first-batch would silently
-        # skip the anti-join, ingest every duplicate, AND append their
-        # hashes to the index — permanent corpus duplication with no
-        # error surfaced.
-        index = None
-    survivors = (
-        firsts
-        if index is None
-        else firsts.join(index, "content_hash", "left_anti")
-    ).withColumn("ingest_batch", F.lit(batch_id).cast("int"))
-    # two consumers follow (table write + hash-index append); without
-    # this pin the upstream batch pipeline would run TWICE per
-    # micro-batch (the ingest_fuzzy_batch rationale) — batch-sized by
-    # contract. Cluster caveat (r15, ADVICE item, applies to every
-    # survivor pin in this module): localCheckpoint blocks have no
-    # lineage, so losing an executor after the pin fails the micro-batch
-    # (and is incompatible with dynamic allocation); the replay-stable
-    # batch_id re-runs it idempotently, which is the accepted trade for
-    # batch-sized frames — swap for reliable checkpoints if not.
-    survivors = survivors.localCheckpoint(eager=True)
-    append_table(survivors, table_dir, batch_id=batch_id)
-    append_index(
-        survivors.select("content_hash"), index_dir, batch_id=batch_id
-    )
-
-
 def drain_to_memory(
     df: DataFrame, *, prefix: str, output_mode: str = "complete"
 ) -> DataFrame:
@@ -427,107 +237,71 @@ def drain_to_memory(
     return df.sparkSession.table(name)
 
 
-def run_streaming_ann_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    drift_floor: float = -0.5,
-    max_drift_frac: float = 0.5,
+# --------------------------------------------------------------------------
+# Rolling ingest: one checkpointed stream, one per-batch lifecycle
+# --------------------------------------------------------------------------
+
+
+def _maybe_auto_compact(
+    spark, stores, batch_id: int, max_batches: "int | None"
 ) -> None:
-    """Rolling-corpus ANN index maintenance as a REAL streaming job — the
-    similarity twin of :func:`run_streaming_ingest_dedup`: embedding
-    batches arrive as files; the first micro-batch trains and persists
-    the IVF index, every later one ingests MAP-ONLY against the stored
-    centroids (operators/similarity.py:append_to_ivf_index — history
-    never re-read), with the checkpoint standing in for the reference's
-    Glue bookmarks (batch_processing_IaC.py:300-304) and the drift gate
-    deciding when a batch forces a retrain.
-
-    Exactly-once composition: the checkpoint guarantees a drained source
-    never re-delivers a batch, and assignment writes are dynamic
-    overwrites keyed by the replay-stable foreachBatch batch_id, so every
-    crash point replays to a fixpoint (same contract as the ingest-dedup
-    pipeline; the first-batch build is replay-safe because build commits
-    its whole generation with one atomic CURRENT-pointer rename — a
-    pre-commit replay redoes the build, a post-commit replay lands in
-    the append path and rewrites exactly the batch's own partitions).
-    The local CURRENT-file existence probe for "is the index born yet"
-    is sandbox-local; on an object store probe the pointer object
-    through the same storage client the writers use."""
-    import os
-
-    from ..operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-    )
-
-    schema = spark.read.format("parquet").load(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if not os.path.exists(f"{index_dir}/CURRENT"):
-            build_ivf_index(
-                batch_df,
-                index_dir,
-                n_centroids=n_centroids,
-                id_col=id_col,
-                vec_col=vec_col,
-                batch_id=batch_id,
-            )
-        else:
-            append_to_ivf_index(
-                batch_df,
-                index_dir,
-                id_col=id_col,
-                vec_col=vec_col,
-                batch_id=batch_id,
-                drift_floor=drift_floor,
-                max_drift_frac=max_drift_frac,
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """The in-band maintenance hook of :func:`run_rolling_ingest`:
+    before micro-batch N, compact each store past ``max_batches`` batch
+    partitions up to the checkpoint-committed horizon N-1. No-op when
+    ``max_batches`` is None — maintenance stays opt-in per pipeline."""
+    if max_batches is None or batch_id == 0:
+        return
+    for store in stores:
+        compact_if_needed(
+            spark,
+            store,
+            committed_upto=batch_id - 1,
+            max_batches=max_batches,
+        )
 
 
-def run_streaming_sparse_ingest(
+def run_rolling_ingest(
     spark: SparkSession,
     source_dir: str,
-    table_dir: str,
-    index_dir: str,
     checkpoint_dir: str,
+    ingest_batch: "Callable[[DataFrame, int], None]",
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 4096,
-    threshold: float = 0.95,
+    stores: "tuple[str, ...]" = (),
     auto_compact_batches: "int | None" = None,
 ) -> None:
-    """Rolling-corpus ingestion with LEXICAL-COSINE dedup as a REAL
-    streaming job — the fifth-modality twin of
-    :func:`run_streaming_ingest_dedup`: each micro-batch drops docs whose
-    hashed-BoW cosine against the PERSISTED inverted index reaches
-    ``threshold`` (word-permuted re-crawls that exact hashing and
-    MinHash shingles both miss), appends survivors to the corpus table
-    and their sparse vectors to the index. Same exactly-once contract:
-    checkpointed sequencing + batch-keyed dynamic overwrites on BOTH
-    writes + the crash-window rule (a replayed batch never reads its own
-    partial index partition)."""
+    """Rolling-corpus ingestion as a REAL streaming job, one file per
+    micro-batch: batches arrive as parquet files under ``source_dir``
+    and each runs ``ingest_batch(batch_df, batch_id)`` — one of the
+    module-level ``ingest_*_batch`` functions with its store dirs and
+    method options bound by ``functools.partial``. The checkpoint
+    stands in for the reference's Glue job bookmarks
+    (batch_processing_IaC.py:300-304).
+
+    Exactly-once by construction, twice over: the checkpoint guarantees
+    a drained source never re-delivers a batch, and every write is a
+    dynamic-partition OVERWRITE keyed by foreachBatch's batch_id —
+    unique per micro-batch and REPLAY-STABLE (an interrupted batch
+    retries under the same id from the checkpoint), so a replayed batch
+    rewrites exactly its own partition instead of appending duplicates.
+    A content-derived key like min(id) is NOT safe here: id spaces that
+    recur across crawls would collide two different batches onto one
+    partition, and the second overwrite would destroy the first batch's
+    rows and index entries. Each history read excludes the batch's own
+    partition, so a crash between a write and the checkpoint commit
+    replays to a fixpoint (:func:`_history`).
+
+    ``auto_compact_batches`` makes the ingest SELF-MAINTAINING: before
+    micro-batch N, each of ``stores`` compacts via
+    :func:`~..operators.index_store.compact_if_needed` whenever it has
+    accreted more than that many batch partitions — the OPTIMIZE loop a
+    24/7 pipeline schedules out-of-band, fused in-band where it is
+    trivially safe. The committed horizon is ``N - 1``: Structured
+    Streaming runs foreachBatch(N) only after batch N-1's checkpoint
+    commit, so every batch at or below N-1 is durably ingested and can
+    merge, while batch N itself (and any crash-replay of it) stays above
+    the watermark. A replay of batch N after a crash re-runs the same
+    compaction first — the generation naming makes that an idempotent
+    fixpoint."""
     schema = spark.read.format("parquet").load(source_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -535,28 +309,186 @@ def run_streaming_sparse_ingest(
         .parquet(source_dir)
     )
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_auto_compact(
-            spark, (table_dir, index_dir), batch_id, auto_compact_batches
-        )
-        ingest_sparse_batch(
-            batch_df,
-            batch_id,
-            table_dir=table_dir,
-            index_dir=index_dir,
-            id_col=id_col,
-            text_col=text_col,
-            dim=dim,
-            threshold=threshold,
-        )
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        _maybe_auto_compact(spark, stores, batch_id, auto_compact_batches)
+        ingest_batch(batch_df, batch_id)
 
     q = (
-        stream.writeStream.foreachBatch(_ingest)
+        stream.writeStream.foreachBatch(_run)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def _appendable(
+    batch_df: DataFrame, batch_id: int, table_dir: str, index_dir: str
+) -> bool:
+    """False for an empty batch; otherwise refuse a replay of a
+    compacted-away batch BEFORE any write. The history read excludes
+    "this batch's own" partition, but after compaction that partition
+    holds the merged HISTORY — the replay would recompute survivors with
+    no history and overwrite a corrupt table partition before
+    append_index's own guard fired. Both stores are checked, table first
+    (the table write happens first)."""
+    if batch_df.isEmpty():
+        return False
+    assert_table_appendable(table_dir, batch_id)
+    assert_appendable(index_dir, batch_id)
+    return True
+
+
+def _keep_first(df: DataFrame, key: Column, id_col: str) -> DataFrame:
+    """Within-batch keep-first: the lowest ``id_col`` per ``key``."""
+    w = Window.partitionBy(key).orderBy(id_col)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _history(spark: SparkSession, batch_id: int, *reads) -> tuple:
+    """Every batch's rows but this one, for each ``(read, store_dir,
+    columns)`` in ``reads`` — read together, or all ``None`` before the
+    first commit. Excluding the batch's own partition is what makes a
+    crash replay a fixpoint: a retry deduping against its own partial
+    output would drop its own rows (a self-match) and lose them from
+    both stores for good."""
+    try:
+        return tuple(
+            read(spark, store_dir)
+            .where(F.col("batch_seq") != F.lit(batch_id))
+            .select(*cols)
+            for read, store_dir, cols in reads
+        )
+    except FileNotFoundError:
+        # ONLY a never-committed store (no CURRENT pointer) means "first
+        # batch". Any other read failure (storage error, corrupted
+        # footer) must raise: treating it as first-batch would silently
+        # skip the dedup, ingest every duplicate, AND append them to the
+        # index — permanent corpus duplication with no error surfaced.
+        return (None,) * len(reads)
+
+
+def _commit(
+    survivors: DataFrame,
+    batch_id: int,
+    table_dir: str,
+    index_dir: str,
+    to_index: "Callable[[DataFrame], DataFrame]",
+) -> None:
+    """Stamp, pin, then write the table and the index. Per-row arrival
+    lineage is the DATA column ``ingest_batch``: table compaction remaps
+    the batch_seq PARTITION value of merged batches (layout metadata)
+    but never touches data columns — the lakehouse-OPTIMIZE contract."""
+    # two consumers follow (table write + index append); without this
+    # pin the batch's dedup pipeline would run TWICE per micro-batch —
+    # batch-sized by contract. Cluster caveat: localCheckpoint blocks
+    # have no lineage, so losing an executor after the pin fails the
+    # micro-batch (and is incompatible with dynamic allocation); the
+    # replay-stable batch_id re-runs it idempotently, which is the
+    # accepted trade for batch-sized frames — swap for reliable
+    # checkpoints if not.
+    survivors = survivors.withColumn(
+        "ingest_batch", F.lit(batch_id).cast("int")
+    ).localCheckpoint(eager=True)
+    append_table(survivors, table_dir, batch_id=batch_id)
+    append_index(to_index(survivors), index_dir, batch_id=batch_id)
+
+
+def _ingest_exact(
+    hashed: DataFrame,
+    batch_id: int,
+    table_dir: str,
+    index_dir: str,
+    id_col: str,
+) -> None:
+    """Exact dedup of a ``content_hash``-carrying batch: keep-first
+    within it, anti-join against the persisted digests, commit."""
+    firsts = _keep_first(hashed, F.col("content_hash"), id_col)
+    (index,) = _history(
+        hashed.sparkSession, batch_id,
+        (read_index, index_dir, ["content_hash"]),
+    )
+    survivors = (
+        firsts
+        if index is None
+        else firsts.join(index, "content_hash", "left_anti")
+    )
+    _commit(
+        survivors, batch_id, table_dir, index_dir,
+        lambda s: s.select("content_hash"),
+    )
+
+
+def ingest_dedup_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    *,
+    table_dir: str,
+    index_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """One micro-batch of the exact-dedup rolling ingest: keep the lowest
+    id per sha256 content hash within the batch, drop hashes already in
+    the PERSISTED fingerprint index, append survivors to the corpus
+    table and their digests to the index — operators.dedup's
+    incremental_dedup composed with :func:`run_rolling_ingest`.
+    Module-level so the crash/replay contract is testable outside the
+    streaming engine. Both sides live in the generationed store
+    (operators/index_store.py), so offline ``compact_index`` /
+    ``compact_table`` runs can merge old batch partitions on either side
+    without breaking the ingest.
+
+    Scale shape per batch: one batch-sized hash-agg for the within-batch
+    keep-first, one anti-join shipping 32-byte digests against an index
+    ~3 orders smaller than the corpus (bucket the index by hash to make
+    it shuffle-free on the history side), map-only writes."""
+    if not _appendable(batch_df, batch_id, table_dir, index_dir):
+        return
+    hashed = batch_df.withColumn("content_hash", F.sha2(F.col(text_col), 256))
+    _ingest_exact(hashed, batch_id, table_dir, index_dir, id_col)
+
+
+def ingest_quality_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    *,
+    table_dir: str,
+    index_dir: str,
+    weights: "dict[str, float]",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """One micro-batch of the QUALITY-GATED rolling ingest — gate + dedup
+    in ONE micro-batch pass, never a separate quality job re-reading the
+    corpus: score quality_features -> quality_logit_score, drop
+    ``logit < 0`` docs AT THE SCAN (map-only, shrinking everything
+    downstream), then exact-dedup the survivors as
+    :func:`ingest_dedup_batch` does and append (id, content_hash,
+    quality_logit) + digests. The weights dict ships as data, loaded
+    driver-side once, never as a worker-side file read.
+    Gate-before-dedup is result-equivalent to dedup-before-gate
+    (identical text => identical features => identical logit)."""
+    if not _appendable(batch_df, batch_id, table_dir, index_dir):
+        return
+    from ..operators.quality import quality_logit_score
+    from ..operators.text import quality_features
+
+    gated = quality_logit_score(
+        quality_features(batch_df, text_col=text_col), weights
+    ).filter(F.col("quality_logit") >= 0)
+    hashed = gated.select(
+        F.col(id_col),
+        F.sha2(F.col(text_col), 256).alias("content_hash"),
+        # exact lattice value: logit of a <=6-decimal model is a
+        # <=6-decimal number, so this round is tie-free (plans/quality.py)
+        F.round("quality_logit", 6).alias("quality_logit"),
+    )
+    _ingest_exact(hashed, batch_id, table_dir, index_dir, id_col)
 
 
 def ingest_sparse_batch(
@@ -570,57 +502,25 @@ def ingest_sparse_batch(
     dim: int = 4096,
     threshold: float = 0.95,
 ) -> None:
-    """One micro-batch of the sparse rolling-ingest — module-level so the
-    crash/replay contract is directly testable outside the streaming
-    engine (the ingest_dedup_batch pattern).
-
-    Within-batch the pipeline keeps the lowest id per EXACT content hash
-    (byte-identical repeats are the overwhelming within-batch case and
-    the cheap one); near-duplicate detection across batches is the
-    inverted index's job — a batch-internal near-dup pair lands both
-    members this batch, and the next batch's copies dedup against both.
-    Idempotent at every crash point: both writes dynamic-overwrite their
-    own batch_seq partition, and the index read EXCLUDES the batch's own
-    partition (a replayed batch anti-scoring against its own partial
-    vectors would drop every surviving doc as a self-duplicate —
-    cosine 1.0 with itself — and permanently lose the whole batch)."""
-    if batch_df.isEmpty():
+    """One micro-batch of the LEXICAL-COSINE rolling ingest: drop docs
+    whose hashed-BoW cosine against the PERSISTED inverted index reaches
+    ``threshold`` (word-permuted re-crawls that exact hashing and MinHash
+    shingles both miss), append survivors to the corpus table and their
+    sparse vectors to the index. Within the batch the lowest id per
+    EXACT content hash is kept (byte-identical repeats are the
+    overwhelming within-batch case and the cheap one); a batch-internal
+    near-dup pair lands both members, and the next batch's copies dedup
+    against both."""
+    if not _appendable(batch_df, batch_id, table_dir, index_dir):
         return
-    from pyspark.sql import Window
-
     from ..operators.dedup import incremental_sparse_dedup
-    from ..operators.index_store import (
-        append_index,
-        append_table,
-        assert_appendable,
-        assert_table_appendable,
-        read_index,
-    )
     from ..operators.text import hashed_doc_vectors
 
-    # compacted-batch replays refuse before any write (ingest_dedup_batch
-    # rationale: the own-partition exclusion would hide merged history;
-    # both stores checked, table first — the table write happens first)
-    assert_table_appendable(table_dir, batch_id)
-    assert_appendable(index_dir, batch_id)
-    spark = batch_df.sparkSession
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
-    firsts = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    firsts = _keep_first(batch_df, F.sha2(F.col(text_col), 256), id_col)
+    (index,) = _history(
+        batch_df.sparkSession, batch_id,
+        (read_index, index_dir, ["id", "idx", "c", "norm2_sum"]),
     )
-    try:
-        index = (
-            read_index(spark, index_dir)
-            .where(F.col("batch_seq") != F.lit(batch_id))
-            .select("id", "idx", "c", "norm2_sum")
-        )
-    except FileNotFoundError:
-        # only a never-committed store means first batch (the
-        # ingest_dedup_batch rule: any other failure must raise, or
-        # every duplicate ingests)
-        index = None
     survivors = (
         firsts
         if index is None
@@ -630,221 +530,12 @@ def ingest_sparse_batch(
             threshold=threshold,
         )
     )
-    survivors = (
-        survivors.withColumn("ingest_batch", F.lit(batch_id).cast("int"))
-        # two consumers follow (table write + vector-index append);
-        # without this pin the inverted-index anti-scoring join — the
-        # batch's dominant cost — would run TWICE per micro-batch (the
-        # ingest_fuzzy_batch rationale); batch-sized by contract
-        .localCheckpoint(eager=True)
-    )
-    append_table(survivors, table_dir, batch_id=batch_id)
-    append_index(
-        hashed_doc_vectors(
-            survivors, id_col=id_col, text_col=text_col, dim=dim
+    _commit(
+        survivors, batch_id, table_dir, index_dir,
+        lambda s: hashed_doc_vectors(
+            s, id_col=id_col, text_col=text_col, dim=dim
         ),
-        index_dir,
-        batch_id=batch_id,
     )
-
-
-def run_streaming_quality_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    table_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    *,
-    weights: "dict[str, float]",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    auto_compact_batches: "int | None" = None,
-) -> None:
-    """Rolling-corpus ingestion with the QUALITY GATE fused into the
-    stream — the seventh composition, and the shape a 100 TB pretraining
-    ingest actually runs (gate + dedup in ONE micro-batch pass, never a
-    separate quality job re-reading the corpus): each micro-batch scores
-    quality_features -> quality_logit_score and drops ``logit < 0`` docs
-    AT THE SCAN (map-only, shrinking everything downstream), then
-    exact-dedups survivors within the batch and against the persisted
-    fingerprint index of earlier GATED survivors, and appends
-    (id, content_hash, quality_logit) + digests under the
-    run_streaming_ingest_dedup exactly-once contract (checkpointed
-    sequencing, replay-stable batch-keyed dynamic overwrites, own-
-    partition exclusion). The weights dict is loaded driver-side once
-    (foreachBatch callbacks run on the driver) — the model ships as
-    data, never as a worker-side file read. Gate-before-dedup is
-    result-equivalent to dedup-before-gate here (identical text =>
-    identical features => identical logit), so the oracle can state the
-    fixpoint over the gated set directly."""
-    schema = spark.read.format("parquet").load(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_auto_compact(
-            spark, (table_dir, index_dir), batch_id, auto_compact_batches
-        )
-        ingest_quality_batch(
-            batch_df,
-            batch_id,
-            table_dir=table_dir,
-            index_dir=index_dir,
-            weights=weights,
-            id_col=id_col,
-            text_col=text_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_quality_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    *,
-    table_dir: str,
-    index_dir: str,
-    weights: "dict[str, float]",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """One micro-batch of the quality-gated rolling ingest — module-level
-    so the crash/replay contract is directly testable outside the
-    streaming engine (the ingest_dedup_batch pattern, same idempotency
-    rules: dynamic overwrite on batch_seq for BOTH writes, index read
-    excludes the batch's own partition)."""
-    if batch_df.isEmpty():
-        return
-    from pyspark.sql import Window
-
-    from ..operators.index_store import (
-        assert_appendable,
-        assert_table_appendable,
-    )
-    from ..operators.quality import quality_logit_score
-    from ..operators.text import quality_features
-
-    # compacted-batch replays refuse before any write (ingest_dedup_batch
-    # rationale: the own-partition exclusion would hide merged history;
-    # both stores checked, table first — the table write happens first)
-    assert_table_appendable(table_dir, batch_id)
-    assert_appendable(index_dir, batch_id)
-    spark = batch_df.sparkSession
-    gated = quality_logit_score(
-        quality_features(batch_df, text_col=text_col), weights
-    ).filter(F.col("quality_logit") >= 0)
-    hashed = gated.select(
-        F.col(id_col),
-        F.sha2(F.col(text_col), 256).alias("content_hash"),
-        # exact lattice value: logit of a <=6-decimal model is a
-        # <=6-decimal number, so this round is tie-free (plans/quality.py)
-        F.round("quality_logit", 6).alias("quality_logit"),
-    )
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    firsts = (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    from ..operators.index_store import append_index, append_table, read_index
-
-    try:
-        index = (
-            read_index(spark, index_dir)
-            .where(F.col("batch_seq") != F.lit(batch_id))
-            .select("content_hash")
-        )
-    except FileNotFoundError:
-        # only a never-committed store means first batch (the
-        # ingest_dedup_batch rule: any other failure must raise, or
-        # every duplicate ingests)
-        index = None
-    survivors = (
-        firsts
-        if index is None
-        else firsts.join(index, "content_hash", "left_anti")
-    ).withColumn("ingest_batch", F.lit(batch_id).cast("int"))
-    # two consumers follow (table write + hash-index append); without
-    # this pin the upstream batch pipeline would run TWICE per
-    # micro-batch (the ingest_fuzzy_batch rationale) — batch-sized by
-    # contract
-    survivors = survivors.localCheckpoint(eager=True)
-    append_table(survivors, table_dir, batch_id=batch_id)
-    append_index(
-        survivors.select("content_hash"), index_dir, batch_id=batch_id
-    )
-
-
-def run_streaming_fuzzy_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    table_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    seed: int = 42,
-    jaccard_threshold: float = 0.9,
-    auto_compact_batches: "int | None" = None,
-) -> None:
-    """Rolling-corpus ingestion with NEAR-DUPLICATE dedup as a REAL
-    streaming job — the ninth composition and the fuzzy twin of
-    :func:`run_streaming_ingest_dedup`: each micro-batch keeps the
-    lowest id per exact content hash within itself, band-joins its
-    MinHash signatures against the PERSISTED signature index of earlier
-    survivors (through the generationed store), verifies candidates
-    with exact shingle Jaccard against the corpus table's bodies
-    (point-lookup of candidate history docs only), drops batch docs
-    matching history at ``jaccard_threshold``, and appends survivors +
-    their signatures. Same exactly-once contract as the whole family:
-    checkpointed sequencing, batch-keyed dynamic overwrites on both
-    writes, own-partition exclusion on replay, and the store's
-    watermark refusing compacted-batch replays BEFORE any write."""
-    schema = spark.read.format("parquet").load(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _maybe_auto_compact(
-            spark, (table_dir, index_dir), batch_id, auto_compact_batches
-        )
-        ingest_fuzzy_batch(
-            batch_df,
-            batch_id,
-            table_dir=table_dir,
-            index_dir=index_dir,
-            id_col=id_col,
-            text_col=text_col,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_k=shingle_k,
-            seed=seed,
-            jaccard_threshold=jaccard_threshold,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def ingest_fuzzy_batch(
@@ -861,66 +552,29 @@ def ingest_fuzzy_batch(
     seed: int = 42,
     jaccard_threshold: float = 0.9,
 ) -> None:
-    """One micro-batch of the fuzzy rolling-ingest — module-level so the
-    crash/replay contract is directly testable outside the streaming
-    engine (the ingest_dedup_batch pattern). Within-batch the pipeline
-    keeps the lowest id per EXACT content hash (byte-identical repeats
-    are the cheap overwhelming case; a within-batch NEAR-dup pair lands
-    both members and the next batch's copies dedup against both — the
-    ingest_sparse_batch rationale). Cross-batch near-dups drop via
-    operators.dedup.incremental_fuzzy_dedup: banded signature join
-    against the store-resolved index, exact-Jaccard verify against the
-    corpus table's bodies (candidate-bounded point-lookup — at 100 TB
-    the history ships only matched docs). Idempotent at every crash
-    point: both writes dynamic-overwrite their own batch_seq partition,
-    and BOTH history reads (signature index AND table bodies) exclude
-    the batch's own partition — a replayed batch verifying against its
-    own partial output would self-match at Jaccard 1.0 and permanently
-    lose the whole batch."""
-    if batch_df.isEmpty():
+    """One micro-batch of the NEAR-DUPLICATE rolling ingest: keep the
+    lowest id per exact content hash within the batch (the
+    :func:`ingest_sparse_batch` rationale), then drop cross-batch
+    near-dups via operators.dedup.incremental_fuzzy_dedup — banded
+    MinHash join against the PERSISTED signature index, exact shingle
+    Jaccard verify against the corpus table's bodies (candidate-bounded
+    point-lookup: at 100 TB the history ships only matched docs) — and
+    append survivors + their signatures. BOTH history reads (signature
+    index AND table bodies) exclude the batch's own partition, and they
+    are read together or not at all."""
+    if not _appendable(batch_df, batch_id, table_dir, index_dir):
         return
-    from pyspark.sql import Window
-
     from ..operators.dedup import incremental_fuzzy_dedup, minhash_signatures
-    from ..operators.index_store import (
-        append_index,
-        append_table,
-        assert_appendable,
-        assert_table_appendable,
-        read_index,
-        read_table,
-    )
 
-    # both stores checked before any write, table first (it writes first)
-    assert_table_appendable(table_dir, batch_id)
-    assert_appendable(index_dir, batch_id)
-    spark = batch_df.sparkSession
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
-    firsts = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    firsts = _keep_first(batch_df, F.sha2(F.col(text_col), 256), id_col)
     sig_kw = dict(
         id_col=id_col, num_perm=num_perm, shingle_k=shingle_k, seed=seed
     )
-    try:
-        sig_index = (
-            read_index(spark, index_dir)
-            .where(F.col("batch_seq") != F.lit(batch_id))
-            .select(id_col, "sig")
-        )
-        history = (
-            read_table(spark, table_dir)
-            .where(F.col("batch_seq") != F.lit(batch_id))
-            .select(id_col, text_col)
-        )
-    except FileNotFoundError:
-        # only a never-committed store means first batch (the
-        # ingest_dedup_batch rule: any other failure must raise, or
-        # every near-duplicate ingests)
-        sig_index = None
-        history = None
+    sig_index, history = _history(
+        batch_df.sparkSession, batch_id,
+        (read_index, index_dir, [id_col, "sig"]),
+        (read_table, table_dir, [id_col, text_col]),
+    )
     survivors = (
         firsts
         if sig_index is None
@@ -934,20 +588,59 @@ def ingest_fuzzy_batch(
             **sig_kw,
         )
     )
-    survivors = (
-        survivors.withColumn(
-            "ingest_batch", F.lit(batch_id).cast("int")
-        )
-        # two consumers follow (table write + signature append); without
-        # this pin the banded join + exact-Jaccard verify would run
-        # TWICE per micro-batch — the frame is batch-sized by contract
-        .localCheckpoint(eager=True)
-    )
-    append_table(survivors, table_dir, batch_id=batch_id)
-    append_index(
-        minhash_signatures(survivors, text_col=text_col, **sig_kw).select(
+    _commit(
+        survivors, batch_id, table_dir, index_dir,
+        lambda s: minhash_signatures(s, text_col=text_col, **sig_kw).select(
             id_col, "sig"
         ),
-        index_dir,
-        batch_id=batch_id,
     )
+
+
+def ingest_ann_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    *,
+    index_dir: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int = 16,
+    drift_floor: float = -0.5,
+    max_drift_frac: float = 0.5,
+) -> None:
+    """One micro-batch of rolling ANN index maintenance: the first batch
+    trains and persists the IVF index, every later one ingests MAP-ONLY
+    against the stored centroids
+    (operators/similarity.py:append_to_ivf_index — history never
+    re-read), with the drift gate deciding when a batch forces a
+    retrain. Replay-safe: build commits its whole generation with one
+    atomic CURRENT-pointer rename, so a pre-commit replay redoes the
+    build and a post-commit replay lands in the append path and rewrites
+    exactly the batch's own partitions. The local CURRENT-file existence
+    probe for "is the index born yet" is sandbox-local; on an object
+    store probe the pointer object through the same storage client the
+    writers use."""
+    if batch_df.isEmpty():
+        return
+    import os
+
+    from ..operators.similarity import append_to_ivf_index, build_ivf_index
+
+    if not os.path.exists(f"{index_dir}/CURRENT"):
+        build_ivf_index(
+            batch_df,
+            index_dir,
+            n_centroids=n_centroids,
+            id_col=id_col,
+            vec_col=vec_col,
+            batch_id=batch_id,
+        )
+    else:
+        append_to_ivf_index(
+            batch_df,
+            index_dir,
+            id_col=id_col,
+            vec_col=vec_col,
+            batch_id=batch_id,
+            drift_floor=drift_floor,
+            max_drift_frac=max_drift_frac,
+        )

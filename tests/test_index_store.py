@@ -434,23 +434,35 @@ def test_salted_repartition_empty_frame_is_noop(spark):
     assert out.count() == 0
 
 
-def test_table_store_replay_refuses_before_any_table_write(spark, tmp_path):
+@pytest.mark.parametrize("method", ["dedup", "sparse", "quality", "fuzzy"])
+def test_table_store_replay_refuses_before_any_table_write(
+    spark, tmp_path, method
+):
     """The round-10 contract: the corpus TABLE behind the generationed
     store. After compact_table merges batches 0-1, a replay of
     compacted-away batch 1 must refuse BEFORE ANY WRITE — table-side
     specifically (the index here stays UNcompacted, so the index guard
     cannot be the one firing) — leaving both the table's file listing
-    and its logical rows bit-identical."""
+    and its logical rows bit-identical. Run through every ingest batch
+    function, since they all share the one guard; the quality gate's
+    weights keep every row (logit 0)."""
     import os
+    from functools import partial
 
     from batch_processing_iac_aws_spark.operators.index_store import (
         compact_table,
         read_table,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        ingest_dedup_batch,
-    )
+    from batch_processing_iac_aws_spark.streaming import pipeline
 
+    ingest_batch = {
+        "dedup": pipeline.ingest_dedup_batch,
+        "sparse": pipeline.ingest_sparse_batch,
+        "quality": partial(
+            pipeline.ingest_quality_batch, weights={"bias": 0.0}
+        ),
+        "fuzzy": pipeline.ingest_fuzzy_batch,
+    }[method]
     table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
     b0 = spark.createDataFrame(
         [(0, "alpha"), (1, "beta")], "doc_id long, text string"
@@ -459,8 +471,8 @@ def test_table_store_replay_refuses_before_any_table_write(spark, tmp_path):
         [(10, "alpha"), (11, "gamma")], "doc_id long, text string"
     )
     kw = dict(table_dir=table, index_dir=idx)
-    ingest_dedup_batch(b0, 0, **kw)
-    ingest_dedup_batch(b1, 1, **kw)  # 10 drops (exact dup of 0)
+    ingest_batch(b0, 0, **kw)
+    ingest_batch(b1, 1, **kw)  # 10 drops (exact dup of 0)
     audit = compact_table(spark, table, upto_batch=1)
     assert audit["batches_after"] == 1
     assert audit["rows_before"] == audit["rows_after"] == 3
@@ -481,7 +493,7 @@ def test_table_store_replay_refuses_before_any_table_write(spark, tmp_path):
 
     files_pre = _listing(table)
     with pytest.raises(ValueError, match="watermark"):
-        ingest_dedup_batch(b1, 1, **kw)
+        ingest_batch(b1, 1, **kw)
     assert _listing(table) == files_pre, "refusal must precede any write"
     assert sorted(
         (r["doc_id"], r["ingest_batch"])
@@ -492,7 +504,7 @@ def test_table_store_replay_refuses_before_any_table_write(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(20, "gamma"), (21, "delta")], "doc_id long, text string"
     )
-    ingest_dedup_batch(b2, 2, **kw)
+    ingest_batch(b2, 2, **kw)
     assert sorted(
         (r["doc_id"], r["ingest_batch"])
         for r in read_table(spark, table).collect()
@@ -502,8 +514,8 @@ def test_table_store_replay_refuses_before_any_table_write(spark, tmp_path):
 def test_table_store_streaming_checkpoint_continues_after_compaction(
     spark, tmp_path, store_backend_impl
 ):
-    """run_streaming_ingest_dedup through the REAL streaming engine:
-    batches 0-1 drain, the TABLE compacts mid-checkpoint under the
+    """run_rolling_ingest + ingest_dedup_batch through the REAL streaming
+    engine: batches 0-1 drain, the TABLE compacts mid-checkpoint under the
     atomic generation flip, and the SAME checkpoint resumes for batch 2
     — reading through the new generation and landing its own partition
     above the watermark."""
@@ -513,8 +525,11 @@ def test_table_store_streaming_checkpoint_continues_after_compaction(
         compact_table,
         read_table,
     )
+    from functools import partial
+
     from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ingest_dedup,
+        ingest_dedup_batch,
+        run_rolling_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -523,6 +538,7 @@ def test_table_store_streaming_checkpoint_continues_after_compaction(
         str(tmp_path / "idx"),
         str(tmp_path / "ckpt"),
     )
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=idx)
     stage = str(tmp_path / "stage")
     batches = [
         [(0, "alpha"), (1, "beta")],
@@ -546,14 +562,14 @@ def test_table_store_streaming_checkpoint_continues_after_compaction(
         dst = f"{src}/b{i}.parquet"
         shutil.copy(f, dst)
         os.utime(dst, (time.time() + i, time.time() + i))
-    run_streaming_ingest_dedup(spark, src, table, idx, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     audit = compact_table(spark, table, upto_batch=1)
     assert audit["batches_after"] == 1 and not audit["noop_replay"]
     f = _glob.glob(f"{paths[2]}/*.parquet")[0]
     dst = f"{src}/b2.parquet"
     shutil.copy(f, dst)
     os.utime(dst, (time.time() + 9, time.time() + 9))
-    run_streaming_ingest_dedup(spark, src, table, idx, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert sorted(
         (r["doc_id"], r["ingest_batch"])
         for r in read_table(spark, table).collect()

@@ -5,6 +5,7 @@ incremental file pipeline processes each file exactly once across restarts
 from __future__ import annotations
 
 import datetime as dt
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
@@ -12,8 +13,13 @@ import pytest
 from batch_processing_iac_aws_spark.operators.timeseries import expand_intervals
 from batch_processing_iac_aws_spark.operators.index_store import read_table
 from batch_processing_iac_aws_spark.streaming.pipeline import (
+    ingest_ann_batch,
+    ingest_dedup_batch,
+    ingest_fuzzy_batch,
+    ingest_sparse_batch,
     run_available_now_aggregation,
     run_incremental_expand,
+    run_rolling_ingest,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -249,12 +255,9 @@ def test_streaming_ingest_dedup_exactly_once_across_restarts(spark, tmp_path):
     twice."""
     import os
 
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ingest_dedup,
-    )
-
     src, table = str(tmp_path / "src"), str(tmp_path / "table")
     index, ckpt = str(tmp_path / "index"), str(tmp_path / "ckpt")
+    ingest = partial(ingest_dedup_batch, table_dir=table, index_dir=index)
     rows1 = [(1, "aaa"), (2, "bbb"), (3, "aaa")]  # 3 dups 1 in-batch
     spark.createDataFrame(rows1, "doc_id long, text string").coalesce(
         1
@@ -262,13 +265,13 @@ def test_streaming_ingest_dedup_exactly_once_across_restarts(spark, tmp_path):
     for f in os.listdir(src):
         if f.endswith(".parquet"):
             os.utime(f"{src}/{f}", (1_700_000_000, 1_700_000_000))
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
     ) == [1, 2]
 
     # drained re-run: checkpoint makes it a no-op
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert read_table(spark, table).count() == 2
 
     # new batch arrives: 4 dups batch-1's "aaa" (cross-RUN, via the
@@ -283,7 +286,7 @@ def test_streaming_ingest_dedup_exactly_once_across_restarts(spark, tmp_path):
             if os.path.getmtime(p) < 1_700_000_001:
                 continue
             os.utime(p, (1_700_000_060, 1_700_000_060))
-    run_streaming_ingest_dedup(spark, src, table, index, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
     ) == [1, 2, 5]
@@ -299,10 +302,6 @@ def test_ingest_batch_replay_idempotent_after_partial_index_write(
     must NOT anti-join against its own partial index partition — that
     would shrink the batch to the complement subset and permanently lose
     rows from both table and index."""
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        ingest_dedup_batch,
-    )
-
     table, index = str(tmp_path / "table"), str(tmp_path / "index")
     b0 = spark.createDataFrame(
         [(1, "aaa"), (2, "bbb")], "doc_id long, text string"
@@ -321,10 +320,10 @@ def test_ingest_batch_replay_idempotent_after_partial_index_write(
         read_index,
     )
 
-    partial = spark.createDataFrame(
+    partial_write = spark.createDataFrame(
         [(3, "ccc")], "doc_id long, text string"
     ).select(F.sha2("text", 256).alias("content_hash"))
-    append_index(partial, index, batch_id=1)
+    append_index(partial_write, index, batch_id=1)
 
     b1 = spark.createDataFrame(
         [(3, "ccc"), (4, "aaa"), (5, "ddd")], "doc_id long, text string"
@@ -361,15 +360,13 @@ def test_streaming_ann_ingest_builds_then_appends_exactly_once(
         ivf_assignments,
         read_ivf_centroids,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ann_ingest,
-    )
 
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     )
     src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
+    ingest = partial(ingest_ann_batch, index_dir=idx, n_centroids=8)
     for b in range(2):
         emb.filter(F.col("vec_id") % 3 == b).coalesce(1).write.mode(
             "append"
@@ -377,13 +374,13 @@ def test_streaming_ann_ingest_builds_then_appends_exactly_once(
     for i, f in enumerate(sorted(os.listdir(src))):
         if f.endswith(".parquet"):
             os.utime(f"{src}/{f}", (1_700_000_000 + i, 1_700_000_000 + i))
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     n2 = emb.filter(F.col("vec_id") % 3 != 2).count()
     assert ivf_assignments(spark, idx).count() == n2
     cents_before = read_ivf_centroids(spark, idx)
 
     # drained re-run: no-op
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert ivf_assignments(spark, idx).count() == n2
 
     # third batch arrives: appended map-only, centroids unchanged
@@ -395,7 +392,7 @@ def test_streaming_ann_ingest_builds_then_appends_exactly_once(
         key=os.path.getmtime,
     )
     os.utime(newest, (1_700_000_100, 1_700_000_100))
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert ivf_assignments(spark, idx).count() == emb.count()
     assert read_ivf_centroids(spark, idx) == cents_before
 
@@ -419,21 +416,19 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
         ivf_assignments,
         read_ivf_centroids,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ann_ingest,
-    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
+    ingest = partial(
+        ingest_ann_batch, index_dir=idx, n_centroids=8,
+        drift_floor=0.95, max_drift_frac=0.25,
+    )
     emb.coalesce(1).write.mode("append").parquet(src)
     for i, f in enumerate(sorted(os.listdir(src))):
         if f.endswith(".parquet"):
             os.utime(f"{src}/{f}", (1_700_000_000 + i,) * 2)
-    run_streaming_ann_ingest(
-        spark, src, idx, ckpt, n_centroids=8,
-        drift_floor=0.95, max_drift_frac=0.25,
-    )
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert os.path.basename(_ivf_current(idx)) == "gen-0"
     cents_gen0 = read_ivf_centroids(spark, idx)
 
@@ -457,10 +452,7 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
         key=os.path.getmtime,
     )
     os.utime(newest, (1_700_000_100, 1_700_000_100))
-    run_streaming_ann_ingest(
-        spark, src, idx, ckpt, n_centroids=8,
-        drift_floor=0.95, max_drift_frac=0.25,
-    )
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert os.path.basename(_ivf_current(idx)) == "gen-1"  # retrained
     cents_after = read_ivf_centroids(spark, idx)
     assert cents_after != cents_gen0
@@ -474,10 +466,7 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
     crc = f"{ckpt}/commits/.1.crc"
     if os.path.exists(crc):
         os.remove(crc)
-    run_streaming_ann_ingest(
-        spark, src, idx, ckpt, n_centroids=8,
-        drift_floor=0.95, max_drift_frac=0.25,
-    )
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert os.path.basename(_ivf_current(idx)) == "gen-1"
     assert read_ivf_centroids(spark, idx) == cents_after
     assert ivf_assignments(spark, idx).count() == total
@@ -492,11 +481,6 @@ def test_streaming_sparse_ingest_first_arrival_and_replay(spark, tmp_path):
     the module-level function with a partial own-partition write) is a
     fixpoint."""
     import os
-
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        ingest_sparse_batch,
-        run_streaming_sparse_ingest,
-    )
 
     base_text = ("the quick brown fox jumps over the lazy dog and runs "
                  "far into the deep dark forest tonight")
@@ -521,9 +505,11 @@ def test_streaming_sparse_ingest_first_arrival_and_replay(spark, tmp_path):
             if f.endswith(".parquet") and f not in stamped:
                 os.utime(f"{src}/{f}", (t, t))
                 stamped.add(f)
-    run_streaming_sparse_ingest(
-        spark, src, table, idx, ckpt, dim=1 << 12, threshold=0.95
+    ingest = partial(
+        ingest_sparse_batch,
+        table_dir=table, index_dir=idx, dim=1 << 12, threshold=0.95,
     )
+    run_rolling_ingest(spark, src, ckpt, ingest)
     got = sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
     )
@@ -531,9 +517,7 @@ def test_streaming_sparse_ingest_first_arrival_and_replay(spark, tmp_path):
     assert got == [0, 1, 11, 21]
 
     # drained re-run: checkpoint no-op
-    run_streaming_sparse_ingest(
-        spark, src, table, idx, ckpt, dim=1 << 12, threshold=0.95
-    )
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
     ) == [0, 1, 11, 21]
@@ -550,14 +534,14 @@ def test_streaming_sparse_ingest_first_arrival_and_replay(spark, tmp_path):
         append_index,
     )
 
-    partial = hashed_doc_vectors(
+    partial_write = hashed_doc_vectors(
         spark.createDataFrame(
             [(11, "completely fresh words about parquet pruning")],
             "doc_id long, text string",
         ),
         dim=1 << 12,
     )
-    append_index(partial, idx, batch_id=1)
+    append_index(partial_write, idx, batch_id=1)
     b1 = spark.createDataFrame(rows[1], "doc_id long, text string")
     ingest_sparse_batch(
         b1, 1, table_dir=table, index_dir=idx, dim=1 << 12,
@@ -624,10 +608,10 @@ def test_ingest_quality_batch_gates_dedups_and_replays_idempotently(
         read_index,
     )
 
-    partial = spark.createDataFrame(
+    partial_write = spark.createDataFrame(
         [(5, "one two three four five")], "doc_id long, text string"
     ).select(F.sha2("text", 256).alias("content_hash"))
-    append_index(partial, index, batch_id=1)
+    append_index(partial_write, index, batch_id=1)
     ingest_quality_batch(b1, 1, table_dir=table, index_dir=index, weights=w)
     assert sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
@@ -660,13 +644,11 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
         ivf_index_topk,
         read_ivf_centroids,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ann_ingest,
-    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
+    ingest = partial(ingest_ann_batch, index_dir=idx, n_centroids=8)
     for b in range(2):
         emb.filter(F.col("vec_id") % 3 == b).coalesce(1).write.mode(
             "append"
@@ -674,7 +656,7 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
     for i, f in enumerate(sorted(os.listdir(src))):
         if f.endswith(".parquet"):
             os.utime(f"{src}/{f}", (1_700_000_000 + i,) * 2)
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     q = emb.filter(F.col("vec_id") < 10)
 
     def topk():
@@ -700,7 +682,7 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
         key=os.path.getmtime,
     )
     os.utime(newest, (1_700_000_100,) * 2)
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert ivf_assignments(spark, idx).count() == emb.count()
     assert read_ivf_centroids(spark, idx) == cents
     assert os.path.basename(_ivf_current(idx)) == "gen-c1"
@@ -716,7 +698,7 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
     crc = f"{ckpt}/commits/.2.crc"
     if os.path.exists(crc):
         os.remove(crc)
-    run_streaming_ann_ingest(spark, src, idx, ckpt, n_centroids=8)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert ivf_assignments(spark, idx).count() == emb.count()
 
 
@@ -739,10 +721,6 @@ def test_streaming_fuzzy_ingest_first_arrival_and_replay(spark, tmp_path):
         append_index,
         compact_index,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        ingest_fuzzy_batch,
-        run_streaming_fuzzy_ingest,
-    )
 
     base_text = ("the quick brown fox jumps over the lazy dog and runs "
                  "far into the deep dark forest tonight looking for food")
@@ -757,6 +735,7 @@ def test_streaming_fuzzy_ingest_first_arrival_and_replay(spark, tmp_path):
     src = str(tmp_path / "src")
     table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
+    ingest = partial(ingest_fuzzy_batch, table_dir=table, index_dir=idx)
     stamped: set = set()
     for b in range(3):
         spark.createDataFrame(
@@ -767,13 +746,13 @@ def test_streaming_fuzzy_ingest_first_arrival_and_replay(spark, tmp_path):
             if f.endswith(".parquet") and f not in stamped:
                 os.utime(f"{src}/{f}", (t, t))
                 stamped.add(f)
-    run_streaming_fuzzy_ingest(spark, src, table, idx, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     got = sorted(r["doc_id"] for r in read_table(spark, table).collect())
     # 10 (near-dup) and 20 (exact, J=1.0) both drop against doc 0
     assert got == [0, 1, 11, 21]
 
     # drained re-run: checkpoint no-op
-    run_streaming_fuzzy_ingest(spark, src, table, idx, ckpt)
+    run_rolling_ingest(spark, src, ckpt, ingest)
     assert sorted(
         r["doc_id"] for r in read_table(spark, table).collect()
     ) == [0, 1, 11, 21]
@@ -782,13 +761,13 @@ def test_streaming_fuzzy_ingest_first_arrival_and_replay(spark, tmp_path):
     # 11's signature (partial write), then the full batch replays under
     # the same batch_id — doc 11 must SURVIVE (its own partial entry
     # must not kill it at Jaccard 1.0) and doc 10 still drops vs batch 0
-    partial = minhash_signatures(
+    partial_write = minhash_signatures(
         spark.createDataFrame(
             [(11, "completely fresh words about parquet pruning today")],
             "doc_id long, text string",
         )
     ).select("doc_id", "sig")
-    append_index(partial, idx, batch_id=1)
+    append_index(partial_write, idx, batch_id=1)
     b1 = spark.createDataFrame(rows[1], "doc_id long, text string")
     ingest_fuzzy_batch(b1, 1, table_dir=table, index_dir=idx)
     assert sorted(
@@ -830,9 +809,6 @@ def test_streaming_ingest_auto_compacts_between_batches(spark, tmp_path):
         store_current,
         store_watermark,
     )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_ingest_dedup,
-    )
 
     src, stage = str(tmp_path / "src"), str(tmp_path / "stage")
     table, idx, ckpt = (
@@ -855,8 +831,10 @@ def test_streaming_ingest_auto_compacts_between_batches(spark, tmp_path):
         dst = f"{src}/b{i}.parquet"
         shutil.copy(f, dst)
         os.utime(dst, (time.time() + i, time.time() + i))
-    run_streaming_ingest_dedup(
-        spark, src, table, idx, ckpt, auto_compact_batches=1
+    run_rolling_ingest(
+        spark, src, ckpt,
+        partial(ingest_dedup_batch, table_dir=table, index_dir=idx),
+        stores=(table, idx), auto_compact_batches=1,
     )
     # first-arrival survivors, lineage intact
     assert sorted(
@@ -878,7 +856,7 @@ def test_streaming_ingest_auto_compacts_between_batches(spark, tmp_path):
 
 
 def test_fuzzy_ingest_auto_compacts_between_batches(spark, tmp_path):
-    """The shared _maybe_auto_compact hook through the FUZZY runner (the
+    """The shared _maybe_auto_compact hook through the FUZZY ingest (the
     composition whose history verify reads the table store point-wise):
     merged history must still serve the banded join + exact-Jaccard
     verify — a near-dup re-crawl of a batch-0 doc arriving in batch 2
@@ -891,9 +869,6 @@ def test_fuzzy_ingest_auto_compacts_between_batches(spark, tmp_path):
     from batch_processing_iac_aws_spark.operators.index_store import (
         store_current,
         store_watermark,
-    )
-    from batch_processing_iac_aws_spark.streaming.pipeline import (
-        run_streaming_fuzzy_ingest,
     )
 
     base_text = (
@@ -921,8 +896,10 @@ def test_fuzzy_ingest_auto_compacts_between_batches(spark, tmp_path):
         dst = f"{src}/b{i}.parquet"
         shutil.copy(f, dst)
         os.utime(dst, (time.time() + i, time.time() + i))
-    run_streaming_fuzzy_ingest(
-        spark, src, table, idx, ckpt, auto_compact_batches=1
+    run_rolling_ingest(
+        spark, src, ckpt,
+        partial(ingest_fuzzy_batch, table_dir=table, index_dir=idx),
+        stores=(table, idx), auto_compact_batches=1,
     )
     from batch_processing_iac_aws_spark.operators.index_store import (
         read_table,
