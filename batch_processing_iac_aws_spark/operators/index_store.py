@@ -1,17 +1,19 @@
 """Generationed parquet store for persisted incremental indexes.
 
-The atomic-commit + compaction-watermark lifecycle the ANN index proved
-out (operators/similarity.py: build -> map-only append -> compact ->
-replay-guard), factored into ONE contract so the incremental DEDUP index
-family — sha256 fingerprint digests, simhash longs, banded MinHash
-signatures, sparse inverted postings — shares it instead of reading bare
-parquet trees by path. Same incremental-state-maintenance concern the
-reference solves with Glue job bookmarks (reference
-batch_processing_IaC.py:300-304); the commit trick is the table-format
-one (Delta ``_last_checkpoint`` / Iceberg ``version-hint.text``): every
-multi-file index state assembles invisibly under its own generation dir
-and becomes visible in ONE atomic pointer rename, so no crash point can
-expose half an index.
+ONE atomic-commit + compaction-watermark lifecycle (build/append ->
+compact -> replay-guard) shared by every persisted incremental index:
+the DEDUP index family — sha256 fingerprint digests, simhash longs,
+banded MinHash signatures, sparse inverted postings — the corpus tables
+(aliases below), and the persisted IVF (ANN) index
+(operators/similarity.py), whose pointer, watermark, replay refusal and
+compaction (:func:`_compact_generation`, over its ``assignments`` tree
+keyed by batch and cell) are these same functions, not a copy. Same
+incremental-state-maintenance concern the reference solves with Glue
+job bookmarks (reference batch_processing_IaC.py:300-304); the commit
+trick is the table-format one (Delta ``_last_checkpoint`` / Iceberg
+``version-hint.text``): every multi-file index state assembles
+invisibly under its own generation dir and becomes visible in ONE
+atomic pointer rename, so no crash point can expose half an index.
 
 Layout under ``index_dir``::
 
@@ -698,9 +700,47 @@ def compact_index(
     Returns ``rows_before/rows_after`` (must match — nothing lost or
     doubled), ``files_before/files_after``, ``batches_before/
     batches_after``, and ``noop_replay``."""
+    return _compact_generation(
+        spark,
+        index_dir,
+        upto_batch=upto_batch,
+        subdir="data",
+        keys=["batch_seq"],
+        split_col=split_col,
+        max_rows_per_file=max_rows_per_file,
+        # the schema contract travels with the generation (compaction
+        # never changes the payload schema — derive from the rows read)
+        carry=lambda df, _gen, new_gen: _write_schema_contract(
+            new_gen, _schema_contract(df)
+        ),
+    )
+
+
+def _compact_generation(
+    spark,
+    index_dir: str,
+    *,
+    upto_batch: int,
+    subdir: str,
+    keys: "list[str]",
+    split_col: "str | None",
+    max_rows_per_file: "int | None",
+    carry,
+) -> "dict[str, int | bool]":
+    """The one compaction lifecycle behind :func:`compact_index` and
+    operators/similarity.py:compact_ivf_index: rewrite the committed
+    generation's ``subdir`` tree (partitioned by ``keys``, ``batch_seq``
+    first) with every ``batch_seq <= upto_batch`` remapped to
+    ``upto_batch``, under the fresh generation ``gen-c<upto_batch>``.
+    ``carry(df, gen, new_gen)`` writes whatever else the new generation
+    holds beside the rewritten tree (``df`` is the pre-compaction read)
+    before the watermark, the after-audit and the commit."""
     gen = store_current(index_dir)
     prev = store_watermark(gen)
     if prev is not None and upto_batch < prev:
+        # A lower watermark would REGRESS the replay guard: batches in
+        # (upto_batch, prev] were already merged away, and rewriting
+        # COMPACTED_UPTO below them would re-admit their replays.
         raise ValueError(
             f"compaction watermark must be monotone: index already "
             f"compacted up to batch {prev}, got upto_batch={upto_batch}"
@@ -710,7 +750,7 @@ def compact_index(
         # Replay of an already-committed compaction: CURRENT is flipped
         # last, so if it names our target the generation is complete.
         rows, files, batches = layout_audit(
-            spark.read.parquet(f"{gen}/data")
+            spark.read.parquet(f"{gen}/{subdir}")
         )
         return {
             "rows_before": rows, "rows_after": rows,
@@ -719,7 +759,7 @@ def compact_index(
             "noop_replay": True,
         }
     new_gen = f"{index_dir}/{name}"
-    df = spark.read.parquet(f"{gen}/data")
+    df = spark.read.parquet(f"{gen}/{subdir}")
     rows_b, files_b, batches_b = layout_audit(df)
     remapped = df.withColumn(
         "batch_seq",
@@ -730,24 +770,24 @@ def compact_index(
     if split_col is None:
         split_col = next(c for c in df.columns if c != "batch_seq")
     (
+        # one shuffle keyed exactly like the layout: one file per
+        # surviving partition, or several for a salted giant one
         salted_repartition(
             remapped,
-            ["batch_seq"],
+            keys,
             split_col=split_col,
             max_rows_per_file=max_rows_per_file,
         )
         .write.mode("overwrite")
-        .partitionBy("batch_seq")
-        .parquet(f"{new_gen}/data")
+        .partitionBy(*keys)
+        .parquet(f"{new_gen}/{subdir}")
     )
+    carry(df, gen, new_gen)
     _STORE_BACKEND.put_small_atomic(
         f"{new_gen}/COMPACTED_UPTO", str(upto_batch)
     )
-    # the schema contract travels with the generation (compaction never
-    # changes the payload schema — derive from the rows just rewritten)
-    _write_schema_contract(new_gen, _schema_contract(df))
     rows_a, files_a, batches_a = layout_audit(
-        spark.read.parquet(f"{new_gen}/data")
+        spark.read.parquet(f"{new_gen}/{subdir}")
     )
     store_commit(index_dir, name)
     prune_store_generations(index_dir)

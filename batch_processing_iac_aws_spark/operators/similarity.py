@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from ..functions.vectors import cosine, dot, l2_norm
+from . import index_store
 
 # deterministic pseudo-random doubles in [-1, 1) from a fixed LCG: avoids a
 # numpy dependency at definition time and guarantees reproducible planes
@@ -537,42 +538,6 @@ def _ivf_search(
     )
 
 
-def _ivf_commit(index_dir: str, gen: str) -> None:
-    """Atomically flip the index's CURRENT pointer to generation ``gen``
-    — the single-commit trick table formats use (Delta _last_checkpoint,
-    Iceberg version-hint): every multi-file index state is built
-    invisibly under its own generation dir and becomes visible in ONE
-    atomic file rename, so no crash point can expose half an index or
-    pair new assignments with old centroids. Shared lifecycle:
-    operators/index_store.py (the same contract the incremental dedup
-    indexes use)."""
-    from .index_store import store_commit
-
-    store_commit(index_dir, gen)
-
-
-def _ivf_current(index_dir: str) -> str:
-    """Resolve the committed generation dir. Loud when the index was
-    never committed — readers must not guess at half-written state."""
-    try:
-        from .index_store import store_current
-
-        return store_current(index_dir)
-    except FileNotFoundError as exc:
-        raise FileNotFoundError(
-            f"no committed IVF index at {index_dir} (CURRENT pointer "
-            "missing — build_ivf_index never completed here)"
-        ) from exc
-
-
-def _ivf_prune_generations(index_dir: str) -> None:
-    """Best-effort removal of non-current generation dirs (a crash
-    between commit and prune leaves garbage, never corruption)."""
-    from .index_store import prune_store_generations
-
-    prune_store_generations(index_dir)
-
-
 def _write_ivf_centroids(
     spark, centroids: list[tuple[int, list[float]]], gen_dir: str
 ) -> None:
@@ -600,7 +565,9 @@ def read_ivf_centroids(spark, index_dir: str) -> list[tuple[int, list[float]]]:
     Model-sized collect (n_centroids x dim doubles) — the same bytes a
     broadcast would ship."""
     rows = (
-        spark.read.parquet(f"{_ivf_current(index_dir)}/centroids")
+        spark.read.parquet(
+            f"{index_store.store_current(index_dir)}/centroids"
+        )
         .orderBy("centroid_id")
         .collect()
     )
@@ -611,7 +578,9 @@ def ivf_assignments(spark, index_dir: str) -> DataFrame:
     """The committed generation's assignment table
     (id, vec, norm, batch_seq, ivf_cluster) — the supported way to read
     the index contents (generation dirs are an implementation detail)."""
-    return spark.read.parquet(f"{_ivf_current(index_dir)}/assignments")
+    return spark.read.parquet(
+        f"{index_store.store_current(index_dir)}/assignments"
+    )
 
 
 def build_ivf_index(
@@ -639,11 +608,11 @@ def build_ivf_index(
         (the streaming/pipeline.py idempotency contract);
     plus a ``CURRENT`` pointer file naming the committed generation.
     Builds and retrains assemble a COMPLETE generation invisibly, then
-    commit it with one atomic pointer rename (:func:`_ivf_commit`) —
-    there is no crash point at which readers can see half an index or a
-    centroids/assignments mismatch, and a replayed build (same
-    replay-stable batch_id) overwrites its own generation and re-commits,
-    a fixpoint.
+    commit it with one atomic pointer rename through the shared store
+    (operators/index_store.py:store_commit) — there is no crash point at
+    which readers can see half an index or a centroids/assignments
+    mismatch, and a replayed build (same replay-stable batch_id)
+    overwrites its own generation and re-commits, a fixpoint.
 
     Centroid init: deterministic seed + exact-integer Lloyd refinement
     over the build corpus (:func:`ivf_refined_centroids` — cells stay
@@ -654,44 +623,18 @@ def build_ivf_index(
     )
     gen_dir = f"{index_dir}/gen-{batch_id}"
     _write_ivf_centroids(corpus.sparkSession, centroids, gen_dir)
-    _write_ivf_assignments(
-        corpus, centroids, gen_dir,
-        id_col=id_col, vec_col=vec_col, batch_id=batch_id,
-        score_round=assign_score_round,
-    )
-    _ivf_commit(index_dir, f"gen-{batch_id}")
-    _ivf_prune_generations(index_dir)
-
-
-def _write_ivf_assignments(
-    batch: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    gen_dir: str,
-    *,
-    id_col: str,
-    vec_col: str,
-    batch_id: int,
-    score_round: "int | None" = None,
-    max_rows_per_file: "int | None" = None,
-) -> None:
-    """Assign + write ONE batch under its own (batch_seq, cell) partitions
-    — dynamic overwrite, so a replayed batch_id rewrites exactly itself.
-    ``max_rows_per_file`` salts giant cells across several files at the
-    WRITE (index_store.salted_repartition) — the same skew guard
-    compaction takes, for corpora hot enough to need it per ingest."""
     assigned = assign_ivf_clusters(
-        batch.select(
+        corpus.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
         ),
         centroids,
         vec_col="vec",
-        score_round=score_round,
+        score_round=assign_score_round,
     )
-    _write_assigned_cells(
-        assigned, gen_dir,
-        batch_id=batch_id, max_rows_per_file=max_rows_per_file,
-    )
+    _write_assigned_cells(assigned, gen_dir, batch_id=batch_id)
+    index_store.store_commit(index_dir, f"gen-{batch_id}")
+    index_store.prune_store_generations(index_dir)
 
 
 def _write_assigned_cells(
@@ -701,10 +644,15 @@ def _write_assigned_cells(
     batch_id: int,
     max_rows_per_file: "int | None" = None,
 ) -> None:
-    """The write half of :func:`_write_ivf_assignments` over a frame that
-    ALREADY carries its cell (``id``, ``vec``, ``ivf_cluster``) — split
-    out (r15) so :func:`append_to_ivf_index` can reuse the scoring pass
-    its drift probe already ran instead of assigning the batch twice."""
+    """Write ONE batch that ALREADY carries its cell (``id``, ``vec``,
+    ``ivf_cluster``) under its own (batch_seq, cell) partitions — dynamic
+    overwrite, so a replayed batch_id rewrites exactly itself. Shared by
+    :func:`build_ivf_index` and :func:`append_to_ivf_index`, which reuses
+    the scoring pass its drift probe already ran instead of assigning the
+    batch twice. ``max_rows_per_file`` salts giant cells across several
+    files at the WRITE (index_store.salted_repartition) — the same skew
+    guard compaction takes, for corpora hot enough to need it per
+    ingest."""
     out = assigned.select(
         "id",
         "vec",
@@ -712,15 +660,13 @@ def _write_assigned_cells(
         F.lit(batch_id).alias("batch_seq"),
         "ivf_cluster",
     )
-    from .index_store import salted_repartition
-
     (
         # repartition on the partition keys first: without it every
         # upstream task writes a sliver into every cell dir (tasks x
         # cells tiny files — measured 512 files and 5s of FS churn for a
         # 2k-row build); with it, one file per (batch, cell) — or
         # several for a salted giant cell when max_rows_per_file is set.
-        salted_repartition(
+        index_store.salted_repartition(
             out,
             ["batch_seq", "ivf_cluster"],
             split_col="id",
@@ -762,26 +708,18 @@ def append_to_ivf_index(
 
     ONE scoring pass serves both the drift probe and the assignment
     write (r15, guide §1.2/§5): the old shape scored the batch against
-    the centroids for the drift aggregate and then AGAIN inside
-    :func:`_write_ivf_assignments` — the scored+assigned frame is now
-    pinned lazily (localCheckpoint materialized by the drift aggregate's
-    own job, so probe and pin are one action) and the no-drift write
-    reads the pinned blocks. Batch-sized by contract; blocks release on
+    the centroids for the drift aggregate and then AGAIN for the
+    assignment write — the scored+assigned frame is now pinned lazily
+    (localCheckpoint materialized by the drift aggregate's own job, so
+    probe and pin are one action) and the no-drift write reads the
+    pinned blocks. Batch-sized by contract; blocks release on
     GC. Same executor-loss caveat as every localCheckpoint here: on a
     real cluster a lost executor fails the micro-batch (no lineage to
     recompute) and the replay-stable batch_id re-runs it — acceptable
     for batch-cadence ingest, swap for reliable checkpoint dirs if not."""
     spark = batch.sparkSession
-    gen_dir = _ivf_current(index_dir)
-    watermark = _ivf_compaction_watermark(gen_dir)
-    if watermark is not None and batch_id <= watermark:
-        raise ValueError(
-            f"batch_id {batch_id} is at or below this index's compaction "
-            f"watermark {watermark} — its original partitions were merged "
-            "by compact_ivf_index, so a replayed ingest would double its "
-            "rows instead of overwriting them. Only compact batches whose "
-            "ingest is checkpoint-committed; new batches need fresh ids."
-        )
+    index_store.assert_appendable(index_dir, batch_id)
+    gen_dir = index_store.store_current(index_dir)
     centroids = read_ivf_centroids(spark, index_dir)
     scored = batch.select(
         F.col(id_col).alias("id"),
@@ -871,11 +809,12 @@ def _retrain_ivf_index(
 
     The new generation is assembled invisibly under its own dir (Spark
     also cannot overwrite a path it is reading in the same job) and
-    becomes visible only via :func:`_ivf_commit`'s atomic pointer rename
-    — readers can never observe assignments without their matching
-    centroids."""
+    becomes visible only via the store's atomic pointer rename
+    (operators/index_store.py:store_commit) — readers can never observe
+    assignments without their matching centroids. A compaction
+    watermark is carried forward through the same store backend."""
     spark = batch.sparkSession
-    cur_gen = _ivf_current(index_dir)
+    cur_gen = index_store.store_current(index_dir)
     new_gen_name = f"gen-{batch_id}"
     new_gen = f"{index_dir}/{new_gen_name}"
     if new_gen == cur_gen:
@@ -962,12 +901,13 @@ def _retrain_ivf_index(
     # ids stay refused even though the retrain rewrote the layout —
     # their rows are still in the index, just not under their own
     # batch_seq partitions.
-    wm = _ivf_compaction_watermark(cur_gen)
+    wm = index_store.store_watermark(cur_gen)
     if wm is not None:
-        with open(f"{new_gen}/COMPACTED_UPTO", "w") as fh:
-            fh.write(str(wm))
-    _ivf_commit(index_dir, new_gen_name)
-    _ivf_prune_generations(index_dir)
+        index_store._STORE_BACKEND.put_small_atomic(
+            f"{new_gen}/COMPACTED_UPTO", str(wm)
+        )
+    index_store.store_commit(index_dir, new_gen_name)
+    index_store.prune_store_generations(index_dir)
 
 
 def ivf_index_topk(
@@ -2266,7 +2206,7 @@ def attach_pq_codes(
     are structurally impossible."""
     if encoding not in ("raw", "residual"):
         raise ValueError(f"unknown PQ encoding: {encoding!r}")
-    gen = _ivf_current(index_dir)
+    gen = index_store.store_current(index_dir)
     assigned = spark.read.parquet(f"{gen}/assignments")
     if encoding == "residual":
         centroids = read_ivf_centroids(spark, index_dir)
@@ -2337,7 +2277,7 @@ def read_pq_codebooks(
     ("raw" for pre-encoding-column indexes). Raises if the generation
     has no attached codes (post-retrain gap — the caller must
     re-attach, not search stale codes)."""
-    gen = _ivf_current(index_dir)
+    gen = index_store.store_current(index_dir)
     from pyspark.errors import AnalysisException
 
     try:
@@ -2387,7 +2327,7 @@ def ivf_pq_index_topk(
     impossible."""
     from ..session import local_frame
 
-    gen = _ivf_current(index_dir)
+    gen = index_store.store_current(index_dir)
     centroids = read_ivf_centroids(spark, index_dir)
     cbs, grid, encoding = read_pq_codebooks(spark, index_dir)
     C = np.array([cv for _, cv in centroids], dtype=np.float64)
@@ -2459,16 +2399,6 @@ def ivf_pq_index_topk(
     )
 
 
-def _ivf_layout_audit(assignments: DataFrame) -> "tuple[int, int, int]":
-    """(rows, files, batches) of an assignment tree in ONE aggregation
-    job — file count via input_file_name so the audit is engine-side and
-    works on any filesystem the scan does (no driver directory walk).
-    Shared implementation: operators/index_store.py:layout_audit."""
-    from .index_store import layout_audit
-
-    return layout_audit(assignments)
-
-
 def compact_ivf_index(
     spark,
     index_dir: str,
@@ -2489,16 +2419,19 @@ def compact_ivf_index(
     Invariant: ids, vectors, norms, cells, centroids and any attached PQ
     codes are all UNCHANGED — only the file layout moves — so search
     results are bit-identical before and after (asserted in tests and
-    gated in-engine by the registered query). Centroids, ``pq_codes``,
-    ``pq_codebooks`` are carried through to the new generation verbatim.
+    gated in-engine by the registered query). Centroids, ``pq_codes``
+    and ``pq_codebooks`` are carried row-for-row into the new generation
+    (each by one Spark read and write).
 
-    Crash/replay story (same contract as build/retrain): the compacted
-    state assembles invisibly under its own generation dir ``gen-c<N>``
-    and becomes visible in :func:`_ivf_commit`'s single atomic pointer
-    rename; a replayed compaction with the same watermark finds CURRENT
-    already naming its target and no-ops (fixpoint). Only compact batches
-    whose ingest is checkpoint-COMMITTED: the watermark is persisted in
-    the generation (``COMPACTED_UPTO``) and :func:`append_to_ivf_index`
+    The lifecycle is the store's own — the same core as
+    operators/index_store.py:compact_index, over the ``assignments``
+    tree keyed by (batch_seq, ivf_cluster): the compacted state
+    assembles invisibly under its own generation dir ``gen-c<N>`` and
+    becomes visible in one atomic ``store_commit``; a replayed compaction
+    with the same watermark finds CURRENT already naming its target and
+    no-ops (fixpoint). Only compact batches whose ingest is
+    checkpoint-COMMITTED: the monotone watermark is persisted in the
+    generation (``COMPACTED_UPTO``) and :func:`append_to_ivf_index`
     refuses batch_ids at or below it — a late replay of a compacted-away
     batch would otherwise double its rows under a now-merged partition.
 
@@ -2508,73 +2441,16 @@ def compact_ivf_index(
 
     Returns the audit counts the caller gates on:
     ``rows_before/rows_after`` (must match — nothing lost or doubled),
-    ``files_before/files_after``, ``batches_before/batches_after``, and
-    ``pq_codes_carried``."""
-    import os
-    import shutil
+    ``files_before/files_after``, ``batches_before/batches_after``,
+    ``noop_replay``, and ``pq_codes_carried`` (read off the committed
+    generation)."""
 
-    from .index_store import salted_repartition
-
-    gen = _ivf_current(index_dir)
-    prev = _ivf_compaction_watermark(gen)
-    if prev is not None and upto_batch < prev:
-        # A lower watermark would REGRESS the replay guard: batches in
-        # (upto_batch, prev] were already merged away, and rewriting
-        # COMPACTED_UPTO below them would re-admit their replays —
-        # exactly the silent row-doubling the watermark exists to stop.
-        raise ValueError(
-            f"compaction watermark must be monotone: index already "
-            f"compacted up to batch {prev}, got upto_batch={upto_batch}"
-        )
-    name = f"gen-c{upto_batch}"
-    if os.path.basename(gen.rstrip("/")) == name:
-        # Replay of an already-committed compaction: CURRENT is flipped
-        # last, so if it names our target the generation is complete.
-        rows, files, batches = _ivf_layout_audit(
-            spark.read.parquet(f"{gen}/assignments")
-        )
-        return {
-            "rows_before": rows, "rows_after": rows,
-            "files_before": files, "files_after": files,
-            "batches_before": batches, "batches_after": batches,
-            "pq_codes_carried": os.path.isdir(f"{gen}/pq_codebooks"),
-            "noop_replay": True,
-        }
-    new_gen = f"{index_dir}/{name}"
-    a = spark.read.parquet(f"{gen}/assignments")
-    rows_b, files_b, batches_b = _ivf_layout_audit(a)
-    (
-        a.withColumn(
-            "batch_seq",
-            F.when(
-                F.col("batch_seq") <= upto_batch, F.lit(upto_batch)
-            )
-            .otherwise(F.col("batch_seq"))
-            .cast("long"),
-        )
-        .transform(
-            # one shuffle keyed exactly like the layout: one file per
-            # surviving (batch_seq, cell) partition — unless
-            # max_rows_per_file is set, in which case giant cells salt
-            # across several target files (the skew guard a corpus-scale
-            # hot cell needs; deterministic id-hash salt, so the rewrite
-            # stays partition-invariant). index_store.salted_repartition.
-            lambda d: salted_repartition(
-                d,
-                ["batch_seq", "ivf_cluster"],
-                split_col="id",
-                max_rows_per_file=max_rows_per_file,
-            )
-        )
-        .write.mode("overwrite")
-        .partitionBy("batch_seq", "ivf_cluster")
-        .parquet(f"{new_gen}/assignments")
-    )
-    spark.read.parquet(f"{gen}/centroids").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{new_gen}/centroids")
-    carried = os.path.isdir(f"{gen}/pq_codebooks")
-    if carried:
+    def carry(_df, gen, new_gen):
+        spark.read.parquet(f"{gen}/centroids").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{new_gen}/centroids")
+        if not index_store._STORE_BACKEND.is_dir(f"{gen}/pq_codebooks"):
+            return
         (
             spark.read.parquet(f"{gen}/pq_codes")
             .repartition(F.col("ivf_cluster"))
@@ -2582,31 +2458,21 @@ def compact_ivf_index(
             .partitionBy("ivf_cluster")
             .parquet(f"{new_gen}/pq_codes")
         )
-        shutil.copytree(
-            f"{gen}/pq_codebooks",
-            f"{new_gen}/pq_codebooks",
-            dirs_exist_ok=True,
-        )
-    with open(f"{new_gen}/COMPACTED_UPTO", "w") as fh:
-        fh.write(str(upto_batch))
-    rows_a, files_a, batches_a = _ivf_layout_audit(
-        spark.read.parquet(f"{new_gen}/assignments")
+        spark.read.parquet(f"{gen}/pq_codebooks").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{new_gen}/pq_codebooks")
+
+    audit = index_store._compact_generation(
+        spark,
+        index_dir,
+        upto_batch=upto_batch,
+        subdir="assignments",
+        keys=["batch_seq", "ivf_cluster"],
+        split_col="id",
+        max_rows_per_file=max_rows_per_file,
+        carry=carry,
     )
-    _ivf_commit(index_dir, name)
-    _ivf_prune_generations(index_dir)
-    return {
-        "rows_before": rows_b, "rows_after": rows_a,
-        "files_before": files_b, "files_after": files_a,
-        "batches_before": batches_b, "batches_after": batches_a,
-        "pq_codes_carried": carried,
-        "noop_replay": False,
-    }
-
-
-def _ivf_compaction_watermark(gen_dir: str) -> "int | None":
-    """The generation's persisted compaction watermark, if any."""
-    try:
-        with open(f"{gen_dir}/COMPACTED_UPTO") as fh:
-            return int(fh.read().strip())
-    except FileNotFoundError:
-        return None
+    audit["pq_codes_carried"] = index_store._STORE_BACKEND.is_dir(
+        f"{index_store.store_current(index_dir)}/pq_codebooks"
+    )
+    return audit

@@ -615,17 +615,19 @@ def ingest_ann_batch(
     retrain. Replay-safe: build commits its whole generation with one
     atomic CURRENT-pointer rename, so a pre-commit replay redoes the
     build and a post-commit replay lands in the append path and rewrites
-    exactly the batch's own partitions. The local CURRENT-file existence
-    probe for "is the index born yet" is sandbox-local; on an object
-    store probe the pointer object through the same storage client the
-    writers use."""
+    exactly the batch's own partitions. "Is the index born yet" is the
+    store's own first-batch signal (``store_current`` raising
+    FileNotFoundError, read through the StoreBackend seam like every
+    other pointer read), so a foreign layout at ``index_dir`` is refused
+    loudly instead of being built over."""
     if batch_df.isEmpty():
         return
-    import os
-
+    from ..operators import index_store
     from ..operators.similarity import append_to_ivf_index, build_ivf_index
 
-    if not os.path.exists(f"{index_dir}/CURRENT"):
+    try:
+        index_store.store_current(index_dir)
+    except FileNotFoundError:
         build_ivf_index(
             batch_df,
             index_dir,
@@ -634,13 +636,13 @@ def ingest_ann_batch(
             vec_col=vec_col,
             batch_id=batch_id,
         )
-    else:
-        append_to_ivf_index(
-            batch_df,
-            index_dir,
-            id_col=id_col,
-            vec_col=vec_col,
-            batch_id=batch_id,
-            drift_floor=drift_floor,
-            max_drift_frac=max_drift_frac,
-        )
+        return
+    append_to_ivf_index(
+        batch_df,
+        index_dir,
+        id_col=id_col,
+        vec_col=vec_col,
+        batch_id=batch_id,
+        drift_floor=drift_floor,
+        max_drift_frac=max_drift_frac,
+    )

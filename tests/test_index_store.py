@@ -1106,6 +1106,76 @@ def test_store_backend_seam_routes_all_control_plane_ops():
         set_store_backend(prev)
 
 
+def test_ivf_lifecycle_routes_control_plane_through_store_backend(
+    spark, tmp_path
+):
+    """The persisted IVF index runs the store's own lifecycle, so its
+    control plane goes through the installed StoreBackend too: the ANN
+    ingest's first-batch CURRENT probe, the append's watermark read, and
+    every COMPACTED_UPTO write — compaction's, and the one a drift
+    retrain carries forward. A bare open() on any of them would bypass
+    an object-store port (and, for writes, the backend's fsync)."""
+    import os
+
+    from batch_processing_iac_aws_spark.operators.index_store import (
+        LocalStoreBackend,
+        set_store_backend,
+    )
+    from batch_processing_iac_aws_spark.operators.similarity import (
+        append_to_ivf_index,
+        compact_ivf_index,
+    )
+    from batch_processing_iac_aws_spark.streaming.pipeline import (
+        ingest_ann_batch,
+    )
+    from tests.conftest import SF_SMOKE
+
+    class Recording(LocalStoreBackend):
+        def __init__(self):
+            self.log: list[tuple[str, str]] = []
+
+        def read_small(self, path):
+            self.log.append(("read", path))
+            return super().read_small(path)
+
+        def put_small_atomic(self, path, text):
+            self.log.append(("put", path))
+            super().put_small_atomic(path, text)
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    idx = str(tmp_path / "ivf")
+    rec = Recording()
+    prev = set_store_backend(rec)
+    try:
+        ingest_ann_batch(
+            emb.filter(F.col("vec_id") % 3 == 0), 0,
+            index_dir=idx, n_centroids=8,
+        )
+        # the "is the index born yet" probe reads the pointer before
+        # the build commits it
+        assert rec.log[0] == ("read", f"{idx}/CURRENT")
+        assert ("put", f"{idx}/CURRENT") in rec.log
+        mark = len(rec.log)
+        assert not append_to_ivf_index(
+            emb.filter(F.col("vec_id") % 3 == 1), idx, batch_id=1
+        )
+        assert ("read", f"{idx}/gen-0/COMPACTED_UPTO") in rec.log[mark:]
+        audit = compact_ivf_index(spark, idx, upto_batch=1)
+        assert audit["rows_before"] == audit["rows_after"] > 0
+        assert append_to_ivf_index(
+            emb.filter(F.col("vec_id") % 3 == 2), idx, batch_id=2,
+            drift_floor=1.1, max_drift_frac=0.0,
+        )
+        assert os.path.basename(store_current(idx)) == "gen-2"
+        assert store_watermark(store_current(idx)) == 1
+        assert [
+            p for op, p in rec.log
+            if op == "put" and p.endswith("/COMPACTED_UPTO")
+        ] == [f"{idx}/gen-c1/COMPACTED_UPTO", f"{idx}/gen-2/COMPACTED_UPTO"]
+    finally:
+        set_store_backend(prev)
+
+
 def test_fake_object_store_conditional_put_protocol(tmp_path):
     """The commit protocol the S3 port needs, pinned on the fake:
     put_if_absent refuses an existing key (If-None-Match: *),

@@ -335,8 +335,8 @@ def test_ivf_retrain_replay_after_partial_append_no_duplicates(
     old complete generation."""
     import pyspark.sql.functions as F
 
+    from batch_processing_iac_aws_spark.operators.index_store import store_current
     from batch_processing_iac_aws_spark.operators.similarity import (
-        _ivf_current,
         append_to_ivf_index,
         build_ivf_index,
         ivf_assignments,
@@ -345,7 +345,7 @@ def test_ivf_retrain_replay_after_partial_append_no_duplicates(
     idx = str(tmp_path / "ivf")
     dim = len(emb.first()["embedding"])
     build_ivf_index(emb, idx, n_centroids=8, batch_id=0)
-    gen0 = _ivf_current(idx)
+    gen0 = store_current(idx)
 
     spike = [0.0] * dim
     spike[0] = 100.0
@@ -376,7 +376,7 @@ def test_ivf_retrain_replay_after_partial_append_no_duplicates(
     stored = ivf_assignments(spark, idx)
     assert stored.count() == emb.count() + 5  # no double-stored batch rows
     assert stored.groupBy("id").count().filter("count > 1").count() == 0
-    assert _ivf_current(idx) != gen0  # committed a fresh generation
+    assert store_current(idx) != gen0  # committed a fresh generation
 
 
 def test_ivf_replayed_committed_retrain_is_idempotent_not_error(
@@ -392,8 +392,8 @@ def test_ivf_replayed_committed_retrain_is_idempotent_not_error(
     row count as drifted regardless of the retrained centroids."""
     import os
 
+    from batch_processing_iac_aws_spark.operators.index_store import store_current
     from batch_processing_iac_aws_spark.operators.similarity import (
-        _ivf_current,
         append_to_ivf_index,
         build_ivf_index,
         ivf_assignments,
@@ -411,7 +411,7 @@ def test_ivf_replayed_committed_retrain_is_idempotent_not_error(
         batch, idx, batch_id=1, drift_floor=1.1, max_drift_frac=0.0
     )
     assert retrained is True
-    assert os.path.basename(_ivf_current(idx)) == "gen-1"
+    assert os.path.basename(store_current(idx)) == "gen-1"
     cents = read_ivf_centroids(spark, idx)
     total = emb.count()
     assert ivf_assignments(spark, idx).count() == total
@@ -422,7 +422,7 @@ def test_ivf_replayed_committed_retrain_is_idempotent_not_error(
         batch, idx, batch_id=1, drift_floor=1.1, max_drift_frac=0.0
     )
     assert retrained2 is False
-    assert os.path.basename(_ivf_current(idx)) == "gen-1"
+    assert os.path.basename(store_current(idx)) == "gen-1"
     assert read_ivf_centroids(spark, idx) == cents
     stored = ivf_assignments(spark, idx)
     assert stored.count() == total

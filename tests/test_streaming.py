@@ -411,8 +411,8 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
     contract)."""
     import os
 
+    from batch_processing_iac_aws_spark.operators.index_store import store_current
     from batch_processing_iac_aws_spark.operators.similarity import (
-        _ivf_current,
         ivf_assignments,
         read_ivf_centroids,
     )
@@ -429,7 +429,7 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
         if f.endswith(".parquet"):
             os.utime(f"{src}/{f}", (1_700_000_000 + i,) * 2)
     run_rolling_ingest(spark, src, ckpt, ingest)
-    assert os.path.basename(_ivf_current(idx)) == "gen-0"
+    assert os.path.basename(store_current(idx)) == "gen-0"
     cents_gen0 = read_ivf_centroids(spark, idx)
 
     dim = len(emb.first()["embedding"])
@@ -453,7 +453,7 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
     )
     os.utime(newest, (1_700_000_100, 1_700_000_100))
     run_rolling_ingest(spark, src, ckpt, ingest)
-    assert os.path.basename(_ivf_current(idx)) == "gen-1"  # retrained
+    assert os.path.basename(store_current(idx)) == "gen-1"  # retrained
     cents_after = read_ivf_centroids(spark, idx)
     assert cents_after != cents_gen0
     total = emb.count() + 5
@@ -467,7 +467,7 @@ def test_streaming_ann_retrain_replayed_across_checkpoint(spark, tmp_path):
     if os.path.exists(crc):
         os.remove(crc)
     run_rolling_ingest(spark, src, ckpt, ingest)
-    assert os.path.basename(_ivf_current(idx)) == "gen-1"
+    assert os.path.basename(store_current(idx)) == "gen-1"
     assert read_ivf_centroids(spark, idx) == cents_after
     assert ivf_assignments(spark, idx).count() == total
 
@@ -637,8 +637,8 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
+    from batch_processing_iac_aws_spark.operators.index_store import store_current
     from batch_processing_iac_aws_spark.operators.similarity import (
-        _ivf_current,
         compact_ivf_index,
         ivf_assignments,
         ivf_index_topk,
@@ -669,7 +669,7 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
     cents = read_ivf_centroids(spark, idx)
     audit = compact_ivf_index(spark, idx, upto_batch=1)
     assert audit["batches_before"] == 2 and audit["batches_after"] == 1
-    assert os.path.basename(_ivf_current(idx)) == "gen-c1"
+    assert os.path.basename(store_current(idx)) == "gen-c1"
     assert topk() == pre and len(pre) > 0
 
     # the stream resumes: batch id 2 clears the watermark and appends
@@ -685,7 +685,7 @@ def test_streaming_ann_ingest_continues_after_compaction(spark, tmp_path):
     run_rolling_ingest(spark, src, ckpt, ingest)
     assert ivf_assignments(spark, idx).count() == emb.count()
     assert read_ivf_centroids(spark, idx) == cents
-    assert os.path.basename(_ivf_current(idx)) == "gen-c1"
+    assert os.path.basename(store_current(idx)) == "gen-c1"
     seqs = sorted(
         r["batch_seq"]
         for r in ivf_assignments(spark, idx)
