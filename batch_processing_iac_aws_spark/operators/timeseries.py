@@ -27,9 +27,13 @@ Two semantic modes (SURVEY.md §2A edge cases):
 
 Scale posture: the expansion is embarrassingly parallel (no shuffle); output
 row count is sum(samples), so the only 100 TB concern is output partition
-sizing — pair with io.write_parquet's file-size targeting. The reference's
-global orderBy (:67) is omitted here (per-row expansion is order-independent)
-and offered as ``sort_within_partitions`` for time-clustered files.
+sizing — pair with io.write_parquet's file-size targeting. Per-row expansion
+is order-independent, so the reference's global orderBy (:67) lives with the
+job, not here: ``reference_job.run_reference_job`` keeps the total order with
+a range partition of one partition per core, sorted within each. A plain
+orderBy would let AQE size that stage by the shuffled bytes of the
+pre-expansion intervals — small enough to coalesce into a single task, which
+would then do the whole ~30x fan-out and write alone.
 """
 
 from __future__ import annotations
@@ -181,8 +185,3 @@ def intervals_from_events(
         F.avg(value).alias("reading"),
     )
 
-
-def sort_within_partitions(df: DataFrame, *cols: str) -> DataFrame:
-    """Time-cluster file contents without a global range shuffle — the scale-
-    aware demotion of the reference's global orderBy (pyspark_script.py:67)."""
-    return df.sortWithinPartitions(*[F.col(c).asc() for c in cols])

@@ -46,8 +46,13 @@ def run_reference_job(
     schema: StructType | None = None,
     compat: bool = False,
 ) -> DataFrame:
-    """Run the reference ETL over a dataset directory; returns the expanded
-    frame that was written (lazily re-readable from ``target_dir``)."""
+    """Run the reference ETL over a dataset directory and write it to
+    ``target_dir``; returns the expanded frame's lazy plan.
+
+    Evaluating the returned frame runs its plan again, CSV scans and range
+    sample included; read the written output with
+    ``spark.read.parquet(target_dir)``. The write makes one file per range
+    partition, so at most one per core of the job."""
     latest = latest_dated_file(source_dir)
     if latest is None:
         # reference behavior was print-and-continue on a stale frame
@@ -56,7 +61,16 @@ def run_reference_job(
             f"no dated CSV (YYYYMMDD_*.csv) found in {source_dir}"
         )
     df = read_csv(spark, str(latest), schema=schema, infer=schema is None)
-    df = df.orderBy(F.col("start_time").asc())  # reference :67
+    # The reference's global sort (:67), kept as a total order over part
+    # files in name order. Not a plain global sort: AQE sizes that sort's
+    # partitions by the shuffled bytes of the pre-expansion intervals,
+    # which fit in one partition, so the ~30x expansion and the whole
+    # Parquet encode would run as one task. An explicit partition count is
+    # never coalesced, so here each core expands and writes its own range.
+    by_start = F.col("start_time").asc()
+    df = df.repartitionByRange(
+        spark.sparkContext.defaultParallelism, by_start
+    ).sortWithinPartitions(by_start)
     expanded = expand_intervals(df, mode="compat" if compat else "strict")
     if compat:
         # the reference drops samples, timedelta_per_sample and the

@@ -17,9 +17,13 @@ Two entry points:
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 #: Conf that is safe to set on a live session (spark.conf.set).
 RUNTIME_CONF: dict[str, str] = {
@@ -111,13 +115,16 @@ def cluster_conf(
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an existing session (idempotent)."""
+    """Apply runtime-settable defaults to an existing session (idempotent).
+
+    A key this build refuses to modify (``AnalysisException``, e.g.
+    ``CANNOT_MODIFY_CONFIG``) is skipped with a warning; any other error
+    propagates."""
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # Non-fatal: an immutable conf on this build — keep going.
-            pass
+        except AnalysisException as exc:
+            log.warning("runtime conf %s not applied: %s", key, exc)
     return spark
 
 

@@ -3,6 +3,10 @@ idempotent partitioned write, plus the pipeline runner semantics."""
 
 from __future__ import annotations
 
+import random
+from datetime import datetime, timedelta
+
+import pyarrow.parquet as pq
 import pytest
 
 from batch_processing_iac_aws_spark.reference_job import (
@@ -67,6 +71,52 @@ def test_compat_mode_emits_reference_strings(spark, dataset, tmp_path):
     assert "samples" not in written.columns
     assert "sample_idx" not in written.columns
     assert "timedelta_per_sample" not in written.columns
+
+
+@pytest.mark.parametrize("compat", [False, True])
+def test_job_fans_out_and_keeps_global_order(spark, tmp_path, compat):
+    # ~400 back-to-back intervals with distinct starts, written to the CSV
+    # in shuffled order so only the job's sort can put them back in line
+    rng = random.Random(17)
+    t = datetime(2023, 7, 3)
+    rows = []
+    for _ in range(400):
+        end = t + timedelta(seconds=rng.randint(10, 120))
+        rows.append((t, end, rng.randint(1, 5)))
+        t = end
+    rng.shuffle(rows)
+    fmt = "%Y-%m-%d %H:%M:%S"
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "20230603_measurement_data.csv").write_text(CSV_OLD)
+    (src / "20230703_measurement_data.csv").write_text(
+        "start_time,end_time,samples,temperature\n"
+        + "".join(
+            f"{a.strftime(fmt)},{b.strftime(fmt)},{n},20.5\n"
+            for a, b, n in rows
+        )
+    )
+    out = tmp_path / "out"
+    run_reference_job(spark, str(src), str(out), compat=compat)
+
+    parts = sorted(
+        p for p in (out / "ingest_date=2023-07-03").iterdir()
+        if p.name.startswith("part-")
+    )
+    starts = [
+        v
+        for p in parts
+        for v in pq.read_table(p, columns=["start_time"])
+        .column("start_time")
+        .to_pylist()
+    ]
+    # compat writes 'yyyy-MM-dd HH:mm:ss' strings, which sort by time
+    assert isinstance(starts[0], str if compat else datetime)
+    assert len(starts) == sum(n for _, _, n in rows)
+    assert starts == sorted(starts)
+    # one file per range partition: the expansion and the write fan out
+    # over the cores instead of running as one task
+    assert 1 < len(parts) <= spark.sparkContext.defaultParallelism
 
 
 def test_run_pipeline_sequences_and_stops_on_failure():
