@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
+from .functions import _quote_ident
 from .session import apply_runtime_conf
 
 #: All driver-generated tables (TESTDATA.md).
@@ -53,6 +54,8 @@ def normalize_event_time(df: DataFrame, col: str) -> DataFrame:
     oracle stable across both encodings.
     """
     dt = df.schema[col].dataType
+    quoted = _quote_ident(col)
+    c = F.col(quoted)
     if isinstance(dt, LongType):
         # nanosAsLong path: integer div (not double math — precision at 1e18).
         # A LongType event-time column is only reachable through the
@@ -65,12 +68,12 @@ def normalize_event_time(df: DataFrame, col: str) -> DataFrame:
         # micros/millis epochs stay < 1e16 until year 2286. Values inside
         # the ambiguous ±116-day band are indistinguishable from micros
         # and fail loudly rather than divide a micros column by 1000.
-        converted = F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast(
+        converted = F.timestamp_micros(F.expr(f"{quoted} div 1000")).cast(
             "timestamp_ntz"
         )
         guarded = (
-            F.when(F.col(col).isNull(), F.lit(None).cast("timestamp_ntz"))
-            .when(F.abs(F.col(col)) >= F.lit(10_000_000_000_000_000), converted)
+            F.when(c.isNull(), F.lit(None).cast("timestamp_ntz"))
+            .when(F.abs(c) >= F.lit(10_000_000_000_000_000), converted)
             .otherwise(
                 F.raise_error(
                     F.concat(
@@ -79,7 +82,7 @@ def normalize_event_time(df: DataFrame, col: str) -> DataFrame:
                             "inside the ambiguous near-epoch band (|v| < "
                             "1e16) — raw INT64 micros/millis encoding? "
                         ),
-                        F.col(col).cast("string"),
+                        c.cast("string"),
                     )
                 ).cast("timestamp_ntz")
             )
@@ -89,7 +92,7 @@ def normalize_event_time(df: DataFrame, col: str) -> DataFrame:
         return df
     if isinstance(dt, TimestampType):
         # session TZ is pinned to UTC, so this relabel is value-preserving
-        return df.withColumn(col, F.col(col).cast("timestamp_ntz"))
+        return df.withColumn(col, c.cast("timestamp_ntz"))
     return df
 
 #: Small dimension tables that should always be broadcast in joins.

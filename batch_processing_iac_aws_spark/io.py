@@ -319,6 +319,10 @@ def write_parquet(
     ``target_file_rows`` optionally repartitions before the write to control
     output file count/size — at 100 TB, small-file explosions and single-file
     monoliths are both failure modes.
+
+    TIMESTAMP columns are written as INT64 microseconds under the session's
+    ``spark.sql.parquet.outputTimestampType`` (``session.RUNTIME_CONF``),
+    not the deprecated INT96; Spark has no per-write option for it.
     """
     writer = df.write.mode(mode)
     if target_file_rows:

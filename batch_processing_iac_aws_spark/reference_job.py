@@ -25,6 +25,7 @@ Spark-native rebuild:
 
 from __future__ import annotations
 
+import logging
 import time
 from collections.abc import Callable, Sequence
 from typing import Any
@@ -36,6 +37,8 @@ from pyspark.sql.types import StructType
 from .io import read_csv, write_parquet
 from .operators.timeseries import expand_intervals
 from .sources.files import latest_dated_file, parse_file_date
+
+log = logging.getLogger(__name__)
 
 
 def run_reference_job(
@@ -93,7 +96,8 @@ def run_pipeline(
 ) -> dict[str, Any]:
     """Sequence jobs like the reference's state machine: linear order,
     blocking, stop on first (post-retry) failure. Returns per-job results
-    keyed by name; raises the failing job's exception."""
+    keyed by name; raises the failing job's exception. Each failure that
+    is retried is logged as a warning with its traceback."""
     results: dict[str, Any] = {}
     for name, job in jobs:
         attempt = 0
@@ -105,6 +109,10 @@ def run_pipeline(
                 attempt += 1
                 if attempt > max_retries:
                     raise
+                log.warning(
+                    "job %s failed on attempt %d of %d; retrying",
+                    name, attempt, max_retries + 1, exc_info=True,
+                )
                 if retry_wait_s:
                     time.sleep(retry_wait_s)
     return results

@@ -43,6 +43,12 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow-accelerated toPandas / pandas UDF transfer.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Write TIMESTAMP columns as Parquet INT64 microseconds, not Spark's
+    # default 12-byte INT96, which the Parquet format deprecates. Spark's
+    # timestamps are microseconds, so nothing is lost; Spark, DuckDB and
+    # pyarrow read the INT64 values as the same instants (pyarrow as
+    # tz=UTC). Only a session conf sets it: Spark takes no per-write option.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
 #: Conf that must be set before the JVM/session starts.
@@ -204,8 +210,10 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     vanilla session from /tmp: ModuleNotFoundError inside mapInPandas).
     Zip the package once per session and ship it via ``addPyFile`` —
     workers prepend fetched files to sys.path, fixing every current and
-    future by-reference closure in one place. No-op when the zip cannot
-    be built (read-only tmp); per-SparkContext memo keeps it one-shot."""
+    future by-reference closure in one place. When the zip cannot be
+    built (``OSError``, e.g. a read-only tmp) it logs a warning and ships
+    nothing; any other error, ``addPyFile``'s included, propagates. A
+    per-SparkContext memo keeps it one-shot."""
     import os
     import tempfile
     import zipfile
@@ -236,9 +244,10 @@ def ensure_worker_imports(spark: SparkSession) -> None:
                         continue
                     full = os.path.join(dirpath, f)
                     z.write(full, os.path.relpath(full, root))
+    except OSError as exc:
+        # a driver launched from the repo root never needs the zip, and
+        # failing a query over a packaging nicety is worse
+        log.warning("package zip for executor workers not built: %s", exc)
+    else:
         sc.addPyFile(zpath)
-        _PYFILES_SHIPPED.add(key)
-    except Exception:
-        # best-effort: a driver launched from the repo root never needs
-        # this, and failing a query over a packaging nicety is worse
-        _PYFILES_SHIPPED.add(key)
+    _PYFILES_SHIPPED.add(key)

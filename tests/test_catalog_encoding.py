@@ -131,3 +131,11 @@ def test_historical_nanos_accepted_including_pre_epoch(spark, tmp_path):
     assert dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
     got = _normalized(spark, path)
     assert [t for _, t in got] == instants
+
+
+def test_nanos_column_with_backtick_in_name(spark):
+    df = spark.range(1).selectExpr(
+        "1700000000000000000L AS `event ``ts`", "id"
+    )
+    out = normalize_event_time(df, "event `ts")
+    assert out.first()["event `ts"] == dt.datetime(2023, 11, 14, 22, 13, 20)

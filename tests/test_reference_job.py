@@ -3,9 +3,11 @@ idempotent partitioned write, plus the pipeline runner semantics."""
 
 from __future__ import annotations
 
+import logging
 import random
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -71,6 +73,36 @@ def test_compat_mode_emits_reference_strings(spark, dataset, tmp_path):
     assert "samples" not in written.columns
     assert "sample_idx" not in written.columns
     assert "timedelta_per_sample" not in written.columns
+
+
+@pytest.mark.parametrize("compat", [False, True])
+def test_written_timestamp_encoding(spark, dataset, tmp_path, compat):
+    out = tmp_path / "out"
+    expanded = run_reference_job(spark, str(dataset), str(out), compat=compat)
+    # strict: INT64 microseconds, not Spark's default INT96; compat: the
+    # reference's from_unixtime strings
+    want = (
+        ("BYTE_ARRAY", pa.string())
+        if compat
+        else ("INT64", pa.timestamp("us", tz="UTC"))
+    )
+    parts = sorted((out / "ingest_date=2023-07-03").glob("part-*"))
+    assert parts
+    for p in parts:
+        meta = pq.ParquetFile(p)
+        for col in ("start_time", "end_time"):
+            i = meta.schema_arrow.get_field_index(col)
+            got = (
+                meta.schema.column(i).physical_type,
+                meta.schema_arrow.field(col).type,
+            )
+            assert got == want
+    # ingest_date is a string literal in the plan and a DATE partition
+    # value when read back
+    written = spark.read.parquet(str(out)).drop("ingest_date")
+    expected = expanded.drop("ingest_date")
+    assert written.exceptAll(expected).count() == 0
+    assert expected.exceptAll(written).count() == 0
 
 
 @pytest.mark.parametrize("compat", [False, True])
@@ -150,3 +182,27 @@ def test_run_pipeline_retries():
 
     res = run_pipeline([("j", flaky)], max_retries=3)
     assert res == {"j": "done"} and len(attempts) == 3
+
+
+def test_run_pipeline_logs_each_retried_failure(caplog):
+    attempts = []
+
+    def flaky():
+        attempts.append(1)
+        if len(attempts) < 3:
+            raise RuntimeError(f"transient {len(attempts)}")
+        return "done"
+
+    with caplog.at_level(logging.WARNING):
+        assert run_pipeline([("load", flaky)], max_retries=2) == {
+            "load": "done"
+        }
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert [r.getMessage() for r in warned] == [
+        "job load failed on attempt 1 of 3; retrying",
+        "job load failed on attempt 2 of 3; retrying",
+    ]
+    assert [str(r.exc_info[1]) for r in warned] == [
+        "transient 1",
+        "transient 2",
+    ]

@@ -183,3 +183,33 @@ def test_intervals_exact_cents_mean_at_decimal_tie(spark):
         }[51]
         - 56.20875
     ) < 1e-9
+
+
+@pytest.mark.parametrize(
+    "mode,keep", [("strict", False), ("compat", False), ("strict", True)]
+)
+def test_names_with_space_and_backtick(fixture_df, mode, keep):
+    # every name the builder splices into SQL, plus a pass-through column
+    odd = {
+        "start_time": "start `t",
+        "end_time": "end t`",
+        "samples": "n `samples`",
+        "temperature": "temp `c",
+    }
+    idx = "idx `i"
+    got = expand_intervals(
+        fixture_df.withColumnsRenamed(odd),
+        start=odd["start_time"],
+        end=odd["end_time"],
+        samples=odd["samples"],
+        idx_col=idx,
+        mode=mode,
+        keep_interval_cols=keep,
+    ).withColumnsRenamed(
+        {v: k for k, v in odd.items()} | {idx: "sample_idx"}
+    )
+    want = expand_intervals(fixture_df, mode=mode, keep_interval_cols=keep)
+    assert got.columns == want.columns
+    assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
