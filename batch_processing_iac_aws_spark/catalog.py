@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from .functions import _quote_ident
+from .io import read_parquet
 from .session import apply_runtime_conf
 
 #: All driver-generated tables (TESTDATA.md).
@@ -107,9 +108,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - event-time columns -> TIMESTAMP_NTZ in micros via
       :func:`normalize_event_time` (adaptive to the stored encoding)
     - everything else as stored
+
+    The read goes through :func:`io.read_parquet`, so a second load of
+    an unchanged file starts no Spark job.
     """
     apply_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     for col in _EVENT_TIME_COLS.get(name, ()):
         if col in df.columns:
             df = normalize_event_time(df, col)

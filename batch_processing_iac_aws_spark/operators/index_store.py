@@ -35,10 +35,14 @@ ids at or below it, loudly.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..io import read_parquet
 
 
 class StoreBackend:
@@ -410,7 +414,7 @@ def read_index(
       the merged superset would silently include post-K rows.
     """
     gen = store_current(index_dir)
-    df = spark.read.parquet(f"{gen}/data")
+    df = _read_tree(spark, gen)
     if as_of_batch is None:
         return df
     watermark = store_watermark(gen)
@@ -467,24 +471,55 @@ def assert_appendable(index_dir: str, batch_id: int) -> None:
         )
 
 
-def _schema_contract(df: DataFrame) -> "dict[str, str]":
-    """Payload-schema contract form: lower-cased name -> type
-    simpleString, ``batch_seq`` excluded. Name-keyed (parquet resolves
-    columns by name, so order is immaterial) and nullability-blind
-    (Spark's inferred nullability is not stable across writers)."""
-    return {
-        f.name.lower(): f.dataType.simpleString()
-        for f in df.schema.fields
-        if f.name.lower() != "batch_seq"
-    }
-
-
-def _write_schema_contract(gen_dir: str, contract: "dict[str, str]") -> None:
-    import json
-
-    _STORE_BACKEND.put_small_atomic(
-        f"{gen_dir}/SCHEMA", json.dumps(contract, sort_keys=True)
+def _payload_schema(schema: StructType) -> StructType:
+    """``schema`` without ``batch_seq``, which partition discovery adds."""
+    return StructType(
+        [f for f in schema.fields if f.name.lower() != "batch_seq"]
     )
+
+
+def _schema_contract(schema: StructType) -> "dict[str, str]":
+    """Append-guard form of a payload schema: lower-cased name -> type
+    simpleString. Name-keyed (parquet resolves columns by name, so order
+    is immaterial) and nullability-blind (Spark's inferred nullability
+    is not stable across writers)."""
+    return {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
+
+
+def _write_schema(gen_dir: str, payload: StructType) -> None:
+    """Persist the generation's payload schema as ``SCHEMA``: lower-cased
+    name -> that field's StructField JSON, in column order."""
+    _STORE_BACKEND.put_small_atomic(
+        f"{gen_dir}/SCHEMA",
+        json.dumps({f.name.lower(): f.jsonValue() for f in payload.fields}),
+    )
+
+
+def _read_schema(gen_dir: str) -> "StructType | None":
+    """The generation's payload schema from ``SCHEMA``; None when the file
+    is absent or in the flat name -> type-string form of older stores."""
+    try:
+        stored = json.loads(_STORE_BACKEND.read_small(f"{gen_dir}/SCHEMA"))
+    except FileNotFoundError:
+        return None
+    if not (
+        isinstance(stored, dict)
+        and stored
+        and all(isinstance(v, dict) for v in stored.values())
+    ):
+        return None
+    return StructType([StructField.fromJson(v) for v in stored.values()])
+
+
+def _read_tree(spark, gen_dir: str, subdir: str = "data") -> DataFrame:
+    """One tree of a committed generation. The ``data`` tree is read with
+    the payload schema from ``SCHEMA`` (``batch_seq`` comes from partition
+    discovery), so no Spark job infers it; any other tree, or a ``data``
+    tree with no usable ``SCHEMA``, goes through :func:`io.read_parquet`."""
+    schema = _read_schema(gen_dir) if subdir == "data" else None
+    if schema is None:
+        return read_parquet(spark, f"{gen_dir}/{subdir}")
+    return spark.read.schema(schema).parquet(f"{gen_dir}/{subdir}")
 
 
 def assert_append_schema(df: DataFrame, gen_dir: str) -> None:
@@ -497,18 +532,20 @@ def assert_append_schema(df: DataFrame, gen_dir: str) -> None:
     corpus is silent data loss discovered months later. The contract
     lives in the generation as a small ``SCHEMA`` file (one driver-side
     read per append, no Spark job, no directory listing — object-store
-    friendly, same seam notes as the CURRENT pointer); stores created
-    before the contract self-heal by deriving it from the committed
-    footers once and persisting it. Schema EVOLUTION is a deliberate
-    non-feature: an index/table store's payload is its contract — a new
-    column means a new store (or an offline rewrite), never an in-place
-    drift."""
-    import json
-
-    got = _schema_contract(df)
-    try:
-        want = json.loads(_STORE_BACKEND.read_small(f"{gen_dir}/SCHEMA"))
-    except FileNotFoundError:
+    friendly, same seam notes as the CURRENT pointer). The file holds
+    the payload's full schema — lower-cased column name -> StructField
+    JSON, in column order, ``batch_seq`` excluded — which
+    :func:`read_index` passes to the reader; the guard compares only
+    the name-keyed, case-insensitive, nullability-blind type map derived
+    from it (:func:`_schema_contract`). Stores whose ``SCHEMA`` is
+    missing, or in the older flat name -> type-string form, self-heal by
+    deriving it from the committed footers once and persisting it in
+    the current form. Schema EVOLUTION is a deliberate non-feature: an
+    index/table store's payload is its contract — a new column means a
+    new store (or an offline rewrite), never an in-place drift."""
+    got = _schema_contract(_payload_schema(df.schema))
+    stored = _read_schema(gen_dir)
+    if stored is None:
         # pre-contract store: derive from the committed data once and
         # persist — the footer read costs one Spark-metadata pass, paid
         # only on the first post-upgrade append. mergeSchema=true reads
@@ -520,12 +557,13 @@ def assert_append_schema(df: DataFrame, gen_dir: str) -> None:
         # The merged view surfaces the drift instead: a column only some
         # partitions carry heals into the contract as present, and the
         # next short append refuses loudly with the column named.
-        want = _schema_contract(
-            df.sparkSession.read.option("mergeSchema", "true").parquet(
-                f"{gen_dir}/data"
-            )
+        stored = _payload_schema(
+            df.sparkSession.read.option("mergeSchema", "true")
+            .parquet(f"{gen_dir}/data")
+            .schema
         )
-        _write_schema_contract(gen_dir, want)
+        _write_schema(gen_dir, stored)
+    want = _schema_contract(stored)
     if got != want:
         added = sorted(set(got) - set(want))
         missing = sorted(set(want) - set(got))
@@ -574,9 +612,7 @@ def append_index(df: DataFrame, index_dir: str, *, batch_id: int) -> None:
             .partitionBy("batch_seq")
             .parquet(f"{index_dir}/{gname}/data")
         )
-        _write_schema_contract(
-            f"{index_dir}/{gname}", _schema_contract(df)
-        )
+        _write_schema(f"{index_dir}/{gname}", _payload_schema(df.schema))
         store_commit(index_dir, gname)
         return
     assert_append_schema(df, gen)
@@ -710,8 +746,8 @@ def compact_index(
         max_rows_per_file=max_rows_per_file,
         # the schema contract travels with the generation (compaction
         # never changes the payload schema — derive from the rows read)
-        carry=lambda df, _gen, new_gen: _write_schema_contract(
-            new_gen, _schema_contract(df)
+        carry=lambda df, _gen, new_gen: _write_schema(
+            new_gen, _payload_schema(df.schema)
         ),
     )
 
@@ -749,9 +785,7 @@ def _compact_generation(
     if os.path.basename(gen.rstrip("/")) == name:
         # Replay of an already-committed compaction: CURRENT is flipped
         # last, so if it names our target the generation is complete.
-        rows, files, batches = layout_audit(
-            spark.read.parquet(f"{gen}/{subdir}")
-        )
+        rows, files, batches = layout_audit(_read_tree(spark, gen, subdir))
         return {
             "rows_before": rows, "rows_after": rows,
             "files_before": files, "files_after": files,
@@ -759,7 +793,7 @@ def _compact_generation(
             "noop_replay": True,
         }
     new_gen = f"{index_dir}/{name}"
-    df = spark.read.parquet(f"{gen}/{subdir}")
+    df = _read_tree(spark, gen, subdir)
     rows_b, files_b, batches_b = layout_audit(df)
     remapped = df.withColumn(
         "batch_seq",
@@ -787,7 +821,7 @@ def _compact_generation(
         f"{new_gen}/COMPACTED_UPTO", str(upto_batch)
     )
     rows_a, files_a, batches_a = layout_audit(
-        spark.read.parquet(f"{new_gen}/{subdir}")
+        _read_tree(spark, new_gen, subdir)
     )
     store_commit(index_dir, name)
     prune_store_generations(index_dir)
@@ -890,7 +924,7 @@ def migrate_bare_tree(spark, index_dir: str) -> "dict[str, int | bool]":
         .partitionBy("batch_seq")
         .parquet(f"{index_dir}/{gname}/data")
     )
-    _write_schema_contract(f"{index_dir}/{gname}", _schema_contract(src))
+    _write_schema(f"{index_dir}/{gname}", _payload_schema(src.schema))
     store_commit(index_dir, gname)
     rows_after, files_after, batches = layout_audit(
         read_index(spark, index_dir)

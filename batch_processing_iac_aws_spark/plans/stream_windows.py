@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..io import read_parquet
 from ..streaming.pipeline import (
     drain_to_memory,
     ingest_dedup_batch,
@@ -911,7 +912,7 @@ def streaming_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = compact_index(spark, index, upto_batch=1)
     refused = False
     try:
-        ingest(spark.read.parquet(files[1]), 1)
+        ingest(read_parquet(spark, files[1]), 1)
     except ValueError:
         refused = True
     # stage 2: batch 2 arrives later; the SAME checkpoint continues and
@@ -1018,7 +1019,7 @@ def table_compacted_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = layout_audit(read_table(spark, table))
     refused = False
     try:
-        ingest(spark.read.parquet(files[1]), 1)
+        ingest(read_parquet(spark, files[1]), 1)
     except ValueError:
         refused = True
     post = layout_audit(read_table(spark, table))
@@ -1131,7 +1132,7 @@ def table_objectstore_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         pre = layout_audit(read_table(spark, table))
         refused = False
         try:
-            ingest(spark.read.parquet(files[1]), 1)
+            ingest(read_parquet(spark, files[1]), 1)
         except ValueError:
             refused = True
         post = layout_audit(read_table(spark, table))
@@ -1226,6 +1227,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.index_store import (
         compact_if_needed,
         layout_audit,
+        read_index,
         read_table,
         store_current,
         store_watermark,
@@ -1254,13 +1256,13 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen = store_current(store)
         fired = fired and os.path.basename(gen) == "gen-c1"
         fired = fired and store_watermark(gen) == 1
-        _, _, batches = layout_audit(spark.read.parquet(f"{gen}/data"))
+        _, _, batches = layout_audit(read_index(spark, store))
         fired = fired and batches == 2
     # gate 2: replay of compacted-away batch 1 refuses BEFORE ANY WRITE
     pre = layout_audit(read_table(spark, table))
     refused = False
     try:
-        ingest(spark.read.parquet(files[1]), 1)
+        ingest(read_parquet(spark, files[1]), 1)
     except ValueError:
         refused = True
     refused = refused and layout_audit(read_table(spark, table)) == pre
@@ -1278,7 +1280,7 @@ def streaming_autocompact_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         is None
     )
-    ingest(spark.read.parquet(files[2]), 2)
+    ingest(read_parquet(spark, files[2]), 2)
     survivors_post = survivor_digest(read_table(spark, table))
     fixpoint = (
         replay_noop

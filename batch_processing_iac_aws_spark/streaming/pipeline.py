@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import LongType
 
+from ..io import read_parquet
 from ..operators.index_store import (
     append_index,
     append_table,
@@ -33,7 +34,7 @@ def events_stream(spark: SparkSession, path: str) -> DataFrame:
     """readStream over the events parquet layout, normalizing the ns-encoded
     timestamp exactly like catalog.load_table does for batch."""
     apply_runtime_conf(spark)
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     if not path.endswith("/") and path.endswith(".parquet"):
         # the streaming file source needs a directory or glob; turn a single
         # file path into an equivalent glob so its parent becomes basePath
@@ -302,7 +303,7 @@ def run_rolling_ingest(
     the watermark. A replay of batch N after a crash re-runs the same
     compaction first — the generation naming makes that an idempotent
     fixpoint."""
-    schema = spark.read.format("parquet").load(source_dir).schema
+    schema = read_parquet(spark, source_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -15,6 +17,26 @@ def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)`` -> (fn's result, Spark jobs started while it
+    ran), counted by job group through the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -1000,6 +1000,79 @@ def test_snapshot_asof_property_random_lifecycles(spark, tmp_path):
                 read_index(spark, idx, as_of_batch=upto - 1)
 
 
+# --- reads with the generation's SCHEMA (no inference job) -------------
+
+
+def _assert_reads_like_inference(spark, idx):
+    """read_index gives the schema and rows of a plain inferring read of
+    the committed data tree."""
+    got = read_index(spark, idx)
+    plain = spark.read.parquet(f"{store_current(idx)}/data")
+    assert got.schema == plain.schema
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+
+
+def test_read_index_starts_no_job(
+    spark, tmp_path, store_backend_impl, jobs_started
+):
+    idx = str(tmp_path / "idx")
+    append_index(_digests(spark, [(1, "a")]), idx, batch_id=0)
+    append_index(_digests(spark, [(2, "b")]), idx, batch_id=1)
+    df, jobs = jobs_started(lambda: read_index(spark, idx))
+    assert jobs == 0
+    assert df.count() == 2
+
+
+def test_read_index_matches_inference_across_lifecycle(
+    spark, tmp_path, store_backend_impl
+):
+    """Before and after compaction, and after a case-variant append that
+    the name-keyed contract admits."""
+    idx = str(tmp_path / "idx")
+    append_index(_digests(spark, [(1, "a"), (2, "b")]), idx, batch_id=0)
+    append_index(_digests(spark, [(3, "c")]), idx, batch_id=1)
+    _assert_reads_like_inference(spark, idx)
+    append_index(
+        spark.createDataFrame([("z",)], "CONTENT_HASH string"),
+        idx,
+        batch_id=2,
+    )
+    _assert_reads_like_inference(spark, idx)
+    compact_index(spark, idx, upto_batch=1)
+    _assert_reads_like_inference(spark, idx)
+
+
+def test_flat_schema_file_heals_into_full_schema(spark, tmp_path):
+    """A SCHEMA file in the older flat name -> type-string form counts as
+    missing: reads infer, and the next append re-derives the schema and
+    rewrites the file as name -> StructField JSON."""
+    import json
+
+    idx = str(tmp_path / "idx")
+    append_index(_digests(spark, [(1, "a")]), idx, batch_id=0)
+    gen = store_current(idx)
+    with open(f"{gen}/SCHEMA", "w") as fh:
+        json.dump({"content_hash": "string"}, fh)
+    _assert_reads_like_inference(spark, idx)
+    append_index(_digests(spark, [(2, "b")]), idx, batch_id=1)
+    with open(f"{gen}/SCHEMA") as fh:
+        healed = json.load(fh)
+    assert list(healed) == ["content_hash"]
+    assert healed["content_hash"]["type"] == "string"
+    assert healed["content_hash"]["name"] == "content_hash"
+    _assert_reads_like_inference(spark, idx)
+    with pytest.raises(ValueError, match=r"added=\['score'\]"):
+        append_index(
+            spark.createDataFrame(
+                [("x", 1.0)], "content_hash string, score double"
+            ),
+            idx,
+            batch_id=2,
+        )
+
+
 # --- StoreBackend: the control-plane storage seam ----------------------
 
 

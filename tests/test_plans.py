@@ -7,6 +7,7 @@ dimension table is wrong even when its output is right."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from batch_processing_iac_aws_spark.catalog import load_table
 from batch_processing_iac_aws_spark.plans import QUERIES
@@ -499,3 +500,27 @@ def test_store_read_own_batch_exclusion_prunes_partitions(spark, tmp_path):
         .collect()
     ]
     assert files and all("batch_seq=1" not in f for f in files)
+
+
+@pytest.mark.parametrize("name", ["q1_pricing_summary", "q9_product_profit"])
+def test_physical_plan_same_on_schema_cache_miss_and_hit(
+    spark, name, jobs_started
+):
+    """A table read with the schema io.read_parquet kept from an earlier
+    inference plans exactly like the inferring read. Expression and plan
+    ids differ between any two builds, so they are masked."""
+    import re
+
+    from batch_processing_iac_aws_spark import io
+
+    def physical_plan():
+        df = QUERIES[name](spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        plan = re.sub(r"#\d+", "#?", plan)
+        return re.sub(r"plan_id=\d+", "plan_id=?", plan)
+
+    io._schemas.clear()
+    miss, miss_jobs = jobs_started(physical_plan)
+    hit, hit_jobs = jobs_started(physical_plan)
+    assert miss_jobs > 0 and hit_jobs == 0
+    assert miss == hit
